@@ -4,9 +4,11 @@ The reference's entire user-facing surface is: submit a job = (input dir,
 output dir, mapper executable, reducer executable, M, R); workers stream
 text lines through the executables with hash-partitioned, sorted shuffling
 (reference submit.py:80-88, worker/__main__.py:113-192). This package is
-that exact surface on Spark: ``rdd.pipe`` for the executables, a
-``repartitionAndSortWithinPartitions`` shuffle reproducing the reference's
-md5-mod-R partitioning and lexicographic sort (SURVEY §1.4).
+that exact surface on Spark, in the reference's two stages: the map tasks
+get the reference's round-robin file groups (file ``i`` to task ``i % M``)
+with no input shuffle, ``rdd.pipe`` runs the executables, and a
+``partitionBy`` shuffle plus a per-partition external sort reproduce the
+reference's md5-mod-R partitioning and lexicographic sort (SURVEY §1.4).
 """
 
 from map_reduce_group_spark.mr.job import Job, run_job, submit

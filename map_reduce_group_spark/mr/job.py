@@ -2,6 +2,10 @@
 
 Semantics reproduced (citations into /root/reference/):
 
+- map tasks: the sorted input files are dealt round-robin to M map tasks,
+  file ``i`` to task ``i % M`` (manager/__main__.py:371-390) → one
+  ``textFile`` per group, coalesced to one partition and unioned: a narrow
+  dependency, so no input line is shuffled before the mapper;
 - mapper: any stdin/stdout executable, flatMap fan-out per input line
   (worker/__main__.py:126-144) → ``rdd.pipe(mapper)``;
 - key = text before the first tab (worker/__main__.py:138);
@@ -9,28 +13,28 @@ Semantics reproduced (citations into /root/reference/):
   (worker/__main__.py:139-143) → custom ``partitionFunc`` — byte-identical
   routing, not just semantic parity: the worker hashes/sorts lines with the
   trailing '\n' retained (so a tab-less line's key includes it), which
-  ``run_lines`` reproduces by re-appending '\n' around the shuffle
+  the pipeline reproduces by re-appending '\n' around the shuffle
   (tests/test_mr_parity.py:test_tabless_line_newline_parity);
 - per-partition lexicographic full-line sort + k-way merge grouping
-  guarantee (worker/__main__.py:149, 168) →
-  ``repartitionAndSortWithinPartitions`` (Spark's sort-based shuffle spills
-  exactly like the reference's GNU-sort/heapq pipeline, minus the temp
-  files);
+  guarantee (worker/__main__.py:149, 168) → ``partitionBy`` followed by
+  ``_external_sorted`` in each reduce partition (in-memory sort, spilling
+  sorted runs to disk and ``heapq.merge``-ing them past a size threshold,
+  the reference's GNU-sort/heapq shape);
 - reducer: executable over the merged sorted stream
   (worker/__main__.py:174-181) → ``rdd.pipe(reducer)``;
 - sink: ``part-*`` files, output dir recreated per run
   (worker/__main__.py:172-185, manager/__main__.py:358-361) →
   ``saveAsTextFile`` after clearing the target.
 
-Everything the reference's manager/worker control plane does (scheduling,
-stage barrier, heartbeats, fault tolerance — SURVEY §2A A11–A18) is Spark's
-DAGScheduler/executor machinery; this module contains zero control-plane
-code by design.
+So a job runs the reference's two stages: map with partition, then sort,
+merge and reduce. Everything the reference's manager/worker control plane
+does (scheduling, stage barrier, heartbeats, fault tolerance — SURVEY §2A
+A11–A18) is Spark's DAGScheduler/executor machinery; this module contains
+zero control-plane code by design.
 
-Scale: the M/R knobs map to partition counts. On a real cluster M defaults
-to input-split count and R should be sized so each reduce partition fits in
-executor memory; both are pass-throughs to Spark partitioning, so AQE and
-spill handling apply unchanged.
+Scale: M is the number of map tasks (a directory with fewer files than M is
+split into M input splits instead), R the number of reduce partitions; R
+should be sized so each reduce partition fits in executor memory.
 """
 
 from __future__ import annotations
@@ -45,7 +49,7 @@ from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark import RDD
+from pyspark import RDD, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -130,12 +134,22 @@ def _external_sorted(lines: Iterable[str], spill_bytes: int | None = None) -> It
 def run_lines(spark: SparkSession, lines: RDD, job: Job) -> RDD:
     """Run the map→shuffle→sort→reduce pipeline on an RDD of text lines.
 
-    The input is repartitioned to ``num_mappers`` so the M knob governs map
-    parallelism here exactly as ``minPartitions`` does on the file path
-    (one executable process per map partition)."""
+    ``num_mappers`` sets the number of map tasks (one executable process
+    each), as on the file path: more partitions than M are coalesced, a
+    narrow dependency that shuffles nothing; fewer are repartitioned up to
+    M, which shuffles the input once before the mapper."""
+    m, n = job.num_mappers, lines.getNumPartitions()
+    if n > m:
+        lines = lines.coalesce(m)
+    elif n < m:
+        lines = lines.repartition(m)
+    return _map_reduce(lines, job)
+
+
+def _map_reduce(lines: RDD, job: Job) -> RDD:
+    """Pipe each partition of ``lines`` through the mapper (one map task
+    per partition), then md5-partition, sort and reduce."""
     r = job.num_reducers
-    if lines.getNumPartitions() != job.num_mappers:
-        lines = lines.repartition(job.num_mappers)
     mapped = lines.pipe(job.mapper_executable)
     # Strict byte parity with the reference: the worker hashes and sorts
     # mapper-output LINES WITH their trailing '\n' (worker/__main__.py:138 —
@@ -163,12 +177,50 @@ def run_lines(spark: SparkSession, lines: RDD, job: Job) -> RDD:
     return shuffled.map(lambda line: line[:-1]).pipe(job.reducer_executable)
 
 
+def _input_files(sc: SparkContext, directory: str) -> list[str]:
+    """The job's input files sorted by path, listed as ``textFile`` lists
+    them (Hadoop's FileInputFormat): the files of each directory the path
+    matches, without hidden ``_``/``.`` names."""
+    path = sc._jvm.org.apache.hadoop.fs.Path(directory)
+    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+    files = []
+    for match in fs.globStatus(path) or []:
+        entries = fs.listStatus(match.getPath()) if match.isDirectory() else [match]
+        files += [
+            st.getPath().toString()
+            for st in entries
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        ]
+    return sorted(files)
+
+
+# Characters that textFile reads as a path-list separator or a glob, so a
+# file name holding one cannot be passed back to it verbatim.
+_HADOOP_PATH_SYNTAX = re.compile(r"[,{}\[\]*?\\]")
+
+
+def _map_inputs(sc: SparkContext, job: Job) -> RDD:
+    """The job's input lines in at most M partitions, one per map task,
+    with no shuffle. Sorted file ``i`` goes to map task ``i % M``, the
+    reference's round-robin deal (manager/__main__.py:371-390). Each group
+    is one ``textFile`` coalesced to a single partition, so the grouping
+    stays exact when Hadoop splits a large file. A directory with fewer
+    files than M is split into M input splits instead; so is one whose
+    file names textFile would read as path syntax, which then still feeds
+    at most M map tasks with no shuffle, though not in the reference's
+    groups."""
+    m = job.num_mappers
+    files = _input_files(sc, job.input_directory)
+    if len(files) < m or any(_HADOOP_PATH_SYNTAX.search(f) for f in files):
+        lines = sc.textFile(job.input_directory, minPartitions=m)
+        return lines.coalesce(m) if lines.getNumPartitions() > m else lines
+    return sc.union([sc.textFile(",".join(files[i::m])).coalesce(1) for i in range(m)])
+
+
 def run_job(spark: SparkSession, job: Job) -> RDD:
-    """Plan the job's lineage from its input directory (no action yet)."""
-    lines = spark.sparkContext.textFile(
-        job.input_directory, minPartitions=job.num_mappers
-    )
-    return run_lines(spark, lines, job)
+    """Plan the job's lineage from its input directory (no action yet): the
+    round-robin map inputs, then the map→shuffle→sort→reduce pipeline."""
+    return _map_reduce(_map_inputs(spark.sparkContext, job), job)
 
 
 def submit(spark: SparkSession, job: Job) -> None:

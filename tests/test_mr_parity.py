@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 from collections import Counter
 
 import pytest
@@ -292,3 +293,79 @@ def test_wordcount_job_golden_under_forced_spill(spark, corpus, monkeypatch):
     job = Job(inp, out, f"{EXEC_DIR}/wc_map.py", f"{EXEC_DIR}/wc_reduce.py", 2, 4)
     submit(spark, job)
     assert _read_output(out) == dict(golden)
+
+
+# ------------------------- map-task membership and the two-stage plan ----
+
+
+def _numbered_corpus(root, n_files: int) -> tuple[str, Counter]:
+    """``n_files`` small files whose every line starts with its file's
+    name, plus the word-count golden of the whole corpus."""
+    inp = root / "input"
+    inp.mkdir()
+    golden: Counter = Counter()
+    for f in range(n_files):
+        name = f"file{f:02d}"
+        lines = [f"{name} {WORDS[(i + f) % 7]}" for i in range(50)]
+        # wc_map.py's tokens: lowercase runs of letters
+        golden.update(w for line in lines for w in re.findall("[a-z]+", line.lower()))
+        (inp / f"{name}.txt").write_text("\n".join(lines) + "\n")
+    return str(inp), golden
+
+
+@pytest.mark.parametrize("n_files,m", [(12, 4), (7, 3)])
+def test_map_task_membership_matches_reference(spark, tmp_path, n_files, m):
+    """Map-task parity: the reference deals its sorted input files
+    round-robin, file i to map task i % M (manager/__main__.py:371-390).
+    Each map task is one mapper process, so lines from files i and j must
+    carry the same process tag exactly when i % M == j % M."""
+    from map_reduce_group_spark.mr.job import run_job
+
+    inp, _ = _numbered_corpus(tmp_path, n_files)
+    job = Job(inp, "<unused>", f"{EXEC_DIR}/pid_map.py", f"{EXEC_DIR}/identity_reduce.py", m, 2)
+    tags: dict[int, set[str]] = {}
+    for line in run_job(spark, job).collect():
+        tag, text = line.split("\t", 1)
+        tags.setdefault(int(text.split()[0][len("file"):]), set()).add(tag)
+    assert sorted(tags) == list(range(n_files))
+    assert all(len(t) == 1 for t in tags.values())  # a file is never split across tasks
+    for i in range(n_files):
+        for j in range(n_files):
+            assert (tags[i] == tags[j]) == (i % m == j % m), (i, j)
+
+
+@pytest.mark.parametrize("n_files", [12, 1])
+def test_job_shuffles_only_mapper_output(spark, tmp_path, n_files):
+    """The reference's two stages, map with partition then sort, merge and
+    reduce: the md5 partitionBy is the job's only shuffle, and the input
+    reaches the M map tasks by narrow dependencies, whether there are more
+    files than M (round-robin groups) or fewer (one file split M ways)."""
+    from map_reduce_group_spark.mr.job import run_job
+
+    inp, golden = _numbered_corpus(tmp_path, n_files)
+    out = str(tmp_path / "output")
+    job = Job(inp, out, f"{EXEC_DIR}/wc_map.py", f"{EXEC_DIR}/wc_reduce.py", 4, 4)
+    lineage = run_job(spark, job).toDebugString().decode()
+    assert lineage.count("ShuffledRDD") == 1, lineage
+    tagger = Job(inp, "<unused>", f"{EXEC_DIR}/pid_map.py", f"{EXEC_DIR}/identity_reduce.py", 4, 4)
+    map_tasks = {line.split("\t", 1)[0] for line in run_job(spark, tagger).collect()}
+    assert len(map_tasks) == 4
+    submit(spark, job)
+    assert _read_output(out) == dict(golden)
+
+
+def test_input_file_names_with_path_syntax(spark, tmp_path):
+    """File names that textFile reads as path syntax (a comma separates
+    paths; brackets, braces and '*' glob) must still be read once each,
+    with no input shuffle, as the reference reads any file name."""
+    from map_reduce_group_spark.mr.job import run_job
+
+    inp = tmp_path / "input"
+    inp.mkdir()
+    names = ["a,b.txt", "c[1].txt", "d{x}.txt", "e*.txt", "f.txt"]
+    for name in names:
+        (inp / name).write_text(f"{name}\n")
+    job = Job(str(inp), "<unused>", "cat", f"{EXEC_DIR}/identity_reduce.py", 2, 2)
+    rdd = run_job(spark, job)
+    assert rdd.toDebugString().decode().count("ShuffledRDD") == 1
+    assert sorted(rdd.collect()) == sorted(names)
