@@ -7,7 +7,9 @@ Semantics reproduced (citations into /root/reference/):
   ``textFile`` per group, coalesced to one partition and unioned: a narrow
   dependency, so no input line is shuffled before the mapper;
 - mapper: any stdin/stdout executable, flatMap fan-out per input line
-  (worker/__main__.py:126-144) → ``rdd.pipe(mapper)``;
+  (worker/__main__.py:126-144) → ``rdd.pipe(mapper)``, run with the
+  environment of the worker that spawns it, as the reference's Popen
+  inherits its worker's (worker/__main__.py:128-133);
 - key = text before the first tab (worker/__main__.py:138);
 - partition = int(md5(key_utf8).hexdigest(), 16) % R
   (worker/__main__.py:139-143) → custom ``partitionFunc`` — byte-identical
@@ -131,6 +133,23 @@ def _external_sorted(lines: Iterable[str], spill_bytes: int | None = None) -> It
             f.close()
 
 
+def _environ() -> dict[str, str]:
+    return dict(os.environ)
+
+
+class _WorkerEnviron:
+    """``rdd.pipe``'s ``env`` for an inherited environment. ``env=None``
+    runs the executable with an empty one, and a dict built on the driver
+    would ship the driver's. This object unpickles, in each task, as a copy
+    of the worker process's own ``os.environ``."""
+
+    def __reduce__(self):
+        return (_environ, ())
+
+
+_WORKER_ENV = _WorkerEnviron()
+
+
 def run_lines(spark: SparkSession, lines: RDD, job: Job) -> RDD:
     """Run the map→shuffle→sort→reduce pipeline on an RDD of text lines.
 
@@ -150,7 +169,7 @@ def _map_reduce(lines: RDD, job: Job) -> RDD:
     """Pipe each partition of ``lines`` through the mapper (one map task
     per partition), then md5-partition, sort and reduce."""
     r = job.num_reducers
-    mapped = lines.pipe(job.mapper_executable)
+    mapped = lines.pipe(job.mapper_executable, env=_WORKER_ENV)
     # Strict byte parity with the reference: the worker hashes and sorts
     # mapper-output LINES WITH their trailing '\n' (worker/__main__.py:138 —
     # so a tab-less line's key retains the newline, and the sort compares
@@ -174,7 +193,8 @@ def _map_reduce(lines: RDD, job: Job) -> RDD:
     shuffled = partitioned.keys().mapPartitions(
         _external_sorted, preservesPartitioning=True
     )
-    return shuffled.map(lambda line: line[:-1]).pipe(job.reducer_executable)
+    reduce_in = shuffled.map(lambda line: line[:-1])
+    return reduce_in.pipe(job.reducer_executable, env=_WORKER_ENV)
 
 
 def _input_files(sc: SparkContext, directory: str) -> list[str]:
@@ -267,7 +287,10 @@ def pipe_table(
     from the empty string and a value containing a tab cannot shift fields.
     Executables that only pass fields through (filters, projections, `cat`)
     need no awareness of the escaping; ones that REWRITE text fields must
-    preserve it for the round trip."""
+    preserve it for the round trip. The executable runs with the worker's
+    environment, as the job's mapper and reducer do."""
     rdd = df.rdd.map(lambda row: "\t".join(_pipe_encode(v) for v in row))
-    piped = rdd.pipe(command).map(lambda line: [_pipe_decode(f) for f in line.split("\t")])
+    piped = rdd.pipe(command, env=_WORKER_ENV).map(
+        lambda line: [_pipe_decode(f) for f in line.split("\t")]
+    )
     return df.sparkSession.createDataFrame(piped, output_schema)

@@ -166,7 +166,9 @@ def run_to_memory(
     """Execute a streaming query over all currently-available input
     (availableNow trigger) into an in-memory table; returns the result as a
     batch DataFrame. This is the harness used by tests to prove
-    batch/stream equivalence.
+    batch/stream equivalence. The sink's temp view ``name`` is dropped
+    before returning, so repeated calls leave the session catalog as they
+    found it.
 
     ``state_partitions`` sizes the state store: streaming state is
     partitioned by ``spark.sql.shuffle.partitions`` AT STREAM START (baked
@@ -194,7 +196,10 @@ def run_to_memory(
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", saved)
-    return spark.table(name)
+    # the resolved plan keeps the sink's rows without the view
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 def enrich_with_static(events: DataFrame, dim: DataFrame, on: str = "user_id") -> DataFrame:

@@ -150,13 +150,31 @@ def test_cli_submission(corpus, tmp_path):
 
 
 def test_executable_sees_environment(spark):
-    """Executable-contract parity: the reference spawns executables with an
-    inherited environment (worker/__main__.py:128-133, no env= override) —
-    rdd.pipe does the same, plus supports per-job injection via env=.
-    A mapper that keys on $MRG_TAG must see the injected value."""
+    """Per-call injection: rdd.pipe runs an executable with exactly the
+    env= it is given (an empty environment when it is None, not an
+    inherited one). A mapper that keys on $MRG_TAG must see the injected
+    value."""
     rdd = spark.sparkContext.parallelize(["a", "b", "c"], 2)
     out = rdd.pipe(f"{EXEC_DIR}/env_map.py", env={"MRG_TAG": "tag-42"}).collect()
     assert out == ["tag-42\t1"] * 3
+
+
+def test_job_executables_inherit_worker_environment(spark, tmp_path):
+    """Executable-contract parity: the reference spawns mapper and reducer
+    with its worker's environment (worker/__main__.py:128-133, Popen
+    without env=). Both must see the PATH of the Python worker that runs
+    them, read in the task, not an empty environment."""
+    from map_reduce_group_spark.mr.job import run_job
+
+    inp = tmp_path / "input"
+    inp.mkdir()
+    (inp / "f.txt").write_text("a\nb\nc\n")
+    probe = f"{EXEC_DIR}/env_map.py PATH"
+    got = run_job(spark, Job(str(inp), "<unused>", probe, probe, 2, 2)).collect()
+    worker_path = (
+        spark.sparkContext.parallelize([0], 1).map(lambda _: os.environ["PATH"]).first()
+    )
+    assert got == [f"{worker_path}\t1"] * 3
 
 
 def test_executable_sees_cwd(spark):

@@ -27,6 +27,18 @@ def test_stream_tumbling_equals_batch(spark, sf_dir, events_path):
     assert canonicalize(got.toPandas()) == canonicalize(want.toPandas())
 
 
+def test_run_to_memory_leaves_no_temp_view(spark, sf_dir, events_path):
+    """The memory sink registers its table as a temp view; run_to_memory
+    drops it once resolved, and the returned frame still collects."""
+    from map_reduce_group_spark.catalog import load_table
+
+    before = {t.name for t in spark.catalog.listTables()}
+    stream = es.read_events_stream(spark, events_path)
+    got = es.run_to_memory(es.tumbling_counts(stream), "t_tumbling_no_view")
+    assert {t.name for t in spark.catalog.listTables()} == before
+    assert sum(r["n_events"] for r in got.collect()) == load_table(spark, sf_dir, "events").count()
+
+
 def test_stream_sessions_equal_batch(spark, sf_dir, events_path):
     stream = es.read_events_stream(spark, events_path)
     got = es.run_to_memory(es.session_aggregate(stream), "t_sessions")

@@ -39,29 +39,18 @@ while i < len(_argv):
         args.append(_argv[i])
         i += 1
 
-os.environ.setdefault("SPARK_GRAFT_UI", "true")
-
 from map_reduce_group_spark import session as sess_mod
-
-# same confs as bench, UI on for REST metrics
-_orig = sess_mod.get_session
 
 
 def get_session_ui(app_name="mrg-profile"):
-    import pyspark
-
-    cpus = sess_mod.default_parallelism()
-    builder = (
-        pyspark.sql.SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+    """bench's session (same confs and Python worker daemon), UI on for
+    REST metrics."""
+    spark = (
+        sess_mod.session_builder(app_name)
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4050")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .getOrCreate()
     )
-    for k, v in sess_mod.RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     sess_mod.apply_runtime_confs(spark)
     return spark
 
