@@ -9,7 +9,8 @@ Semantics reproduced (citations into /root/reference/):
 - mapper: any stdin/stdout executable, flatMap fan-out per input line
   (worker/__main__.py:126-144) → ``rdd.pipe(mapper)``, run with the
   environment of the worker that spawns it, as the reference's Popen
-  inherits its worker's (worker/__main__.py:128-133);
+  inherits its worker's (worker/__main__.py:128-133), less the archives
+  PySpark adds to its workers' PYTHONPATH;
 - key = text before the first tab (worker/__main__.py:138);
 - partition = int(md5(key_utf8).hexdigest(), 16) % R
   (worker/__main__.py:139-143) → custom ``partitionFunc`` — byte-identical
@@ -41,6 +42,7 @@ should be sized so each reduce partition fits in executor memory.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import heapq
 import os
@@ -89,7 +91,7 @@ def _first_field(line: str) -> str:
 # x this figure; 128 MiB of line bytes keeps a 32-thread local run well
 # under spark.python.worker.memory while leaving the common case (reduce
 # partition < 128 MiB) a single in-memory sort with zero I/O.
-_SORT_SPILL_BYTES = int(os.environ.get("SPARK_GRAFT_MR_SORT_MEM", str(128 << 20)))
+_SORT_SPILL_BYTES = 128 << 20
 
 
 def _external_sorted(lines: Iterable[str], spill_bytes: int | None = None) -> Iterator[str]:
@@ -133,21 +135,37 @@ def _external_sorted(lines: Iterable[str], spill_bytes: int | None = None) -> It
             f.close()
 
 
-def _environ() -> dict[str, str]:
-    return dict(os.environ)
+def _environ(drop: tuple[str, ...]) -> dict[str, str]:
+    env = dict(os.environ)
+    path = [p for p in env.pop("PYTHONPATH", "").split(os.pathsep) if p and p not in drop]
+    if path:
+        env["PYTHONPATH"] = os.pathsep.join(path)
+    return env
 
 
 class _WorkerEnviron:
     """``rdd.pipe``'s ``env`` for an inherited environment. ``env=None``
     runs the executable with an empty one, and a dict built on the driver
     would ship the driver's. This object unpickles, in each task, as a copy
-    of the worker process's own ``os.environ``."""
+    of the worker process's own ``os.environ``, less the archives PySpark
+    puts on its workers' PYTHONPATH (``drop``: pyspark.zip, py4j and the
+    spark-core jar). The reference's executables see only the user's
+    environment, and with those archives a Python executable's first import
+    reads the jar's central directory, about 35 ms per process."""
+
+    def __init__(self, drop: tuple[str, ...]):
+        self.drop = drop
 
     def __reduce__(self):
-        return (_environ, ())
+        return (_environ, (self.drop,))
 
 
-_WORKER_ENV = _WorkerEnviron()
+@functools.cache
+def _worker_env() -> _WorkerEnviron:
+    """The executables' ``env``, with PySpark's worker archives read once
+    on the driver (``PythonUtils.sparkPythonPath``)."""
+    utils = SparkContext._jvm.org.apache.spark.api.python.PythonUtils
+    return _WorkerEnviron(tuple(utils.sparkPythonPath().split(os.pathsep)))
 
 
 def run_lines(spark: SparkSession, lines: RDD, job: Job) -> RDD:
@@ -169,7 +187,7 @@ def _map_reduce(lines: RDD, job: Job) -> RDD:
     """Pipe each partition of ``lines`` through the mapper (one map task
     per partition), then md5-partition, sort and reduce."""
     r = job.num_reducers
-    mapped = lines.pipe(job.mapper_executable, env=_WORKER_ENV)
+    mapped = lines.pipe(job.mapper_executable, env=_worker_env())
     # Strict byte parity with the reference: the worker hashes and sorts
     # mapper-output LINES WITH their trailing '\n' (worker/__main__.py:138 —
     # so a tab-less line's key retains the newline, and the sort compares
@@ -194,7 +212,7 @@ def _map_reduce(lines: RDD, job: Job) -> RDD:
         _external_sorted, preservesPartitioning=True
     )
     reduce_in = shuffled.map(lambda line: line[:-1])
-    return reduce_in.pipe(job.reducer_executable, env=_WORKER_ENV)
+    return reduce_in.pipe(job.reducer_executable, env=_worker_env())
 
 
 def _input_files(sc: SparkContext, directory: str) -> list[str]:
@@ -290,7 +308,7 @@ def pipe_table(
     preserve it for the round trip. The executable runs with the worker's
     environment, as the job's mapper and reducer do."""
     rdd = df.rdd.map(lambda row: "\t".join(_pipe_encode(v) for v in row))
-    piped = rdd.pipe(command, env=_WORKER_ENV).map(
+    piped = rdd.pipe(command, env=_worker_env()).map(
         lambda line: [_pipe_decode(f) for f in line.split("\t")]
     )
     return df.sparkSession.createDataFrame(piped, output_schema)

@@ -79,12 +79,8 @@ def spread_small_scan(df):
     partitioning-invariance is an engine design invariant pinned by the
     property suite. Keyless ``repartition(n)`` sorts before exchanging
     (SPARK-23207) so retried tasks reproduce the same assignment — safe
-    under speculation. A/B escape hatch: ``SPARK_GRAFT_SPREAD_SCANS=0``.
+    under speculation.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SPREAD_SCANS", "1") == "0":
-        return df
     # ADVICE r9: a streaming frame has no .rdd — never probe it (the
     # streaming operators size state via run_to_memory instead).
     if df.isStreaming:

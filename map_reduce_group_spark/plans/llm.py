@@ -304,30 +304,143 @@ _MH_SEED_VALUES = ", ".join(
     "({}, {}, {})".format(i, *dedup._mh_ab(i)) for i in range(32)
 )
 
+# The data-relative df/bucket cap: ``frac`` of the documents, at least 1.
+_DOC_CAP_SQL = "greatest(CAST(ceil({frac} * (SELECT count(*) FROM documents)) AS BIGINT), 1)"
+
+
+def _shingle_ctes(cap: float | None = None, materialized: bool = False) -> str:
+    """``sets(id, shingles)`` and ``postings(id, set_size, shingle)``: the
+    distinct word-3-gram sets of the documents with >= 3 tokens. With
+    ``cap``, also ``capped``: the postings of shingles in at most
+    ``cap`` of the documents (set_size still counts every shingle)."""
+    m = "MATERIALIZED " if materialized else ""
+    sql = f"""sets AS {m}(
+        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
+        FROM documents
+        WHERE len({_TOKS_SQL}) >= 3
+    ), postings AS {m}(
+        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
+        FROM sets WHERE len(shingles) > 0
+    )"""
+    if cap is not None:
+        sql += f""", capped AS {m}(
+        SELECT id, set_size, shingle FROM (
+            SELECT id, set_size, shingle,
+                   count(*) OVER (PARTITION BY shingle) AS df
+            FROM postings
+        )
+        WHERE df <= {_DOC_CAP_SQL.format(frac=cap)}
+    )"""
+    return sql
+
+
+def _pair_counts(src: str) -> str:
+    """Shared-shingle counts ``(id_a, id_b, size_a, size_b, n_common)``
+    per pair id_a < id_b of the sets in ``src(id, set_size, shingle)``
+    that share a shingle: an inverted-index self-join."""
+    return f"""
+        SELECT a.id AS id_a, b.id AS id_b,
+               a.set_size AS size_a, b.set_size AS size_b,
+               count(*) AS n_common
+        FROM {src} a JOIN {src} b USING (shingle)
+        WHERE a.id < b.id
+        GROUP BY 1, 2, 3, 4"""
+
+
+def _cand_counts(src: str) -> str:
+    """``_pair_counts`` for only the candidate pairs ``cand(id_a, id_b)``."""
+    return f"""
+        SELECT c.id_a, c.id_b, a.set_size AS size_a, b.set_size AS size_b,
+               count(*) AS n_common
+        FROM cand c
+        JOIN {src} a ON a.id = c.id_a
+        JOIN {src} b ON b.id = c.id_b AND b.shingle = a.shingle
+        GROUP BY 1, 2, 3, 4"""
+
+
+# Jaccard of a pair-count row as a 6-dp fixed-point double (integer
+# division, so both engines truncate identically), and its threshold test.
+_JACCARD_SQL = (
+    "(CAST((n_common * 1000000) // (size_a + size_b - n_common) AS DOUBLE)"
+    " / 1000000.0) AS jaccard"
+)
+_JACCARD_MIN_SQL = "CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= {t}"
+
+
+def _minhash_ctes(src: str) -> str:
+    """MinHash(32) signatures ``sigs(id, seed, h)`` and LSH(8 bands)
+    buckets ``bands(id, band, bucket)`` of the sets in ``src(id, set_size,
+    shingle)``: ONE md5 per posting, and the 32 min-hashes are the affine
+    universal family (a_i*h + b_i) mod p over it (dedup._mh_ab)."""
+    return f"""hashed AS (
+        SELECT id, set_size, shingle,
+               {_H60.format(e="shingle")} % 2147483647 AS h0
+        FROM {src}
+    ), seeds AS (
+        SELECT * FROM (VALUES {_MH_SEED_VALUES}) t(seed, a, b)
+    ), sigs AS (
+        SELECT id, seed, min((s.a * h0 + s.b) % 2147483647) AS h
+        FROM hashed CROSS JOIN seeds s
+        GROUP BY id, seed
+    ), bands AS (
+        SELECT id, CAST(seed // 4 AS INT) AS band,
+               string_agg(CAST(h AS VARCHAR), '|' ORDER BY seed) AS bucket
+        FROM sigs GROUP BY 1, 2
+    )"""
+
+
+def _collapse_ctes(src: str) -> str:
+    """Identical-set collapse of ``src(id, set_size, shingle)``, mirroring
+    the Spark operators: exact-clone families verify once through their
+    min-id representative and expand after. ``set_fps`` keys each set by
+    an order-free fingerprint of its kept shingles; ``members(set_fp,
+    set_size, id, n_kept, rep)`` maps every document to its family's rep;
+    ``rpost`` holds the reps' postings. The key includes set_size (under a
+    df cap the kept sets can coincide while the Jaccard denominator
+    differs)."""
+    return f"""set_fps AS (
+        SELECT id, set_size, count(*) AS n_kept,
+               concat(bit_xor(hash(shingle)), ':', sum(hash(shingle)::HUGEINT), ':', count(*)) AS set_fp
+        FROM {src} GROUP BY id, set_size
+    ), reps AS (
+        SELECT set_fp, set_size, min(id) AS rep FROM set_fps GROUP BY 1, 2
+    ), members AS MATERIALIZED (
+        SELECT s.set_fp, s.set_size, s.id, s.n_kept, r.rep
+        FROM set_fps s JOIN reps r USING (set_fp, set_size)
+    ), rpost AS MATERIALIZED (
+        SELECT p.id, p.set_size, p.shingle
+        FROM {src} p JOIN (SELECT DISTINCT rep FROM reps) r ON p.id = r.rep
+    )"""
+
+
+def _expanded_pairs(threshold: float) -> str:
+    """``pairs(id_a, id_b, n_common, jaccard)`` from the collapsed
+    ``rep_pairs(id_a, id_b, n_common, jaccard)``: every member pair of two
+    paired families, plus the pairs within a family, whose sets share all
+    n_kept shingles, where that Jaccard clears ``threshold``."""
+    return f"""pairs AS (
+        SELECT least(ma.id, mb.id) AS id_a, greatest(ma.id, mb.id) AS id_b,
+               rp.n_common, rp.jaccard
+        FROM rep_pairs rp
+        JOIN members ma ON ma.rep = rp.id_a
+        JOIN members mb ON mb.rep = rp.id_b
+        UNION ALL
+        SELECT id_a, id_b, CAST(n_common AS BIGINT) AS n_common, {_JACCARD_SQL} FROM (
+            SELECT m1.id AS id_a, m2.id AS id_b, m1.n_kept AS n_common,
+                   m1.set_size AS size_a, m1.set_size AS size_b
+            FROM members m1 JOIN members m2 USING (set_fp, set_size)
+            WHERE m1.id < m2.id
+        ) WHERE {_JACCARD_MIN_SQL.format(t=threshold)}
+    )"""
+
 
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), pair_counts AS (
-        SELECT a.id AS id_a, b.id AS id_b,
-               a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM postings a JOIN postings b USING (shingle)
-        WHERE a.id < b.id
-        GROUP BY 1, 2, 3, 4
+    WITH {_shingle_ctes()}, pair_counts AS ({_pair_counts("postings")}
     )
-    SELECT id_a, id_b, n_common,
-           (CAST((n_common * 1000000) // (size_a + size_b - n_common) AS DOUBLE)
-               / 1000000.0) AS jaccard
-    FROM pair_counts
-    WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.05
+    SELECT id_a, id_b, n_common, {_JACCARD_SQL}
+    FROM pair_counts WHERE {_JACCARD_MIN_SQL.format(t=0.05)}
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,33 +453,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard_capped",
     oracle=f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), capped AS (
-        SELECT id, set_size, shingle FROM (
-            SELECT id, set_size, shingle,
-                   count(*) OVER (PARTITION BY shingle) AS df
-            FROM postings
-        )
-        WHERE df <= greatest(CAST(ceil(0.01 * (SELECT count(*) FROM documents)) AS BIGINT), 1)
-    ), pair_counts AS (
-        SELECT a.id AS id_a, b.id AS id_b,
-               a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM capped a JOIN capped b USING (shingle)
-        WHERE a.id < b.id
-        GROUP BY 1, 2, 3, 4
+    WITH {_shingle_ctes(cap=0.01)}, pair_counts AS ({_pair_counts("capped")}
     )
-    SELECT id_a, id_b, n_common,
-           (CAST((n_common * 1000000) // (size_a + size_b - n_common) AS DOUBLE)
-               / 1000000.0) AS jaccard
-    FROM pair_counts
-    WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.05
+    SELECT id_a, id_b, n_common, {_JACCARD_SQL}
+    FROM pair_counts WHERE {_JACCARD_MIN_SQL.format(t=0.05)}
     """,
 )
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,27 +477,7 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment",
     oracle=f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), capped AS (
-        SELECT id, set_size, shingle FROM (
-            SELECT id, set_size, shingle,
-                   count(*) OVER (PARTITION BY shingle) AS df
-            FROM postings
-        )
-        WHERE df <= greatest(CAST(ceil(0.01 * (SELECT count(*) FROM documents)) AS BIGINT), 1)
-    ), pair_counts AS (
-        SELECT a.id AS id_a, b.id AS id_b,
-               a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM capped a JOIN capped b USING (shingle)
-        WHERE a.id < b.id
-        GROUP BY 1, 2, 3, 4
+    WITH {_shingle_ctes(cap=0.01)}, pair_counts AS ({_pair_counts("capped")}
     ), directional AS (
         SELECT id_a AS src_id, id_b AS dst_id, n_common, size_a AS src_size
         FROM pair_counts
@@ -441,26 +511,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_jaccard_prefix",
     oracle=f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), pair_counts AS (
-        SELECT a.id AS id_a, b.id AS id_b,
-               a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM postings a JOIN postings b USING (shingle)
-        WHERE a.id < b.id
-        GROUP BY 1, 2, 3, 4
+    WITH {_shingle_ctes()}, pair_counts AS ({_pair_counts("postings")}
     )
-    SELECT id_a, id_b, n_common,
-           (CAST((n_common * 1000000) // (size_a + size_b - n_common) AS DOUBLE)
-               / 1000000.0) AS jaccard
-    FROM pair_counts
-    WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.5
+    SELECT id_a, id_b, n_common, {_JACCARD_SQL}
+    FROM pair_counts WHERE {_JACCARD_MIN_SQL.format(t=0.5)}
     """,
 )
 def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,27 +574,7 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_incremental_minhash",
     oracle=f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), hashed AS (
-        SELECT id, shingle, {_H60.format(e="shingle")} % 2147483647 AS h0
-        FROM postings
-    ), seeds AS (
-        SELECT * FROM (VALUES {_MH_SEED_VALUES}) t(seed, a, b)
-    ), sigs AS (
-        SELECT id, seed, min((s.a * h0 + s.b) % 2147483647) AS h
-        FROM hashed CROSS JOIN seeds s
-        GROUP BY id, seed
-    ), bands AS (
-        SELECT id, CAST(seed // 4 AS INT) AS band,
-               string_agg(CAST(h AS VARCHAR), '|' ORDER BY seed) AS bucket
-        FROM sigs GROUP BY 1, 2
-    ), cand AS (
+    WITH {_shingle_ctes()}, {_minhash_ctes("postings")}, cand AS (
         -- phase 1: the even half probes itself (both directions) …
         SELECT x.id, y.id AS match_id
         FROM bands x JOIN bands y USING (band, bucket)
@@ -607,28 +641,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stand-in for dedup_jaccard_prefix's deliberately all-pairs driver oracle
 # (which verifies losslessness itself at sf0.01, where all-pairs is cheap).
 _PREFIX_PAIRS_CTES = f"""
-    WITH sets AS MATERIALIZED (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS MATERIALIZED (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), set_fps AS (
-        -- identical-set collapse, mirroring the Spark operator: exact-clone
-        -- families verify once through a representative and expand after
-        SELECT id, set_size,
-               concat(bit_xor(hash(shingle)), ':', sum(hash(shingle)::HUGEINT), ':', count(*)) AS set_fp
-        FROM postings GROUP BY id, set_size
-    ), reps AS (
-        SELECT set_fp, min(id) AS rep FROM set_fps GROUP BY 1
-    ), members AS MATERIALIZED (
-        SELECT s.set_fp, s.id, r.rep, s.set_size
-        FROM set_fps s JOIN reps r USING (set_fp)
-    ), rpost AS MATERIALIZED (
-        SELECT p.id, p.set_size, p.shingle
-        FROM postings p JOIN reps r ON p.id = r.rep
-    ), with_df AS (
+    WITH {_shingle_ctes(materialized=True)}, {_collapse_ctes("postings")}, with_df AS (
         SELECT id, set_size, shingle,
                count(*) OVER (PARTITION BY shingle) AS df
         FROM rpost
@@ -645,32 +658,13 @@ _PREFIX_PAIRS_CTES = f"""
         WHERE a.id < b.id
           AND b.set_size >= 0.5 * a.set_size
           AND a.set_size >= 0.5 * b.set_size
-    ), pair_counts AS (
-        SELECT c.id_a, c.id_b, a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM cand c
-        JOIN rpost a ON a.id = c.id_a
-        JOIN rpost b ON b.id = c.id_b AND b.shingle = a.shingle
-        GROUP BY 1, 2, 3, 4
+    ), pair_counts AS ({_cand_counts("rpost")}
     ), rep_pairs AS (
-        SELECT id_a, id_b, n_common,
-               (CAST((n_common * 1000000) // (size_a + size_b - n_common) AS DOUBLE)
-               / 1000000.0) AS jaccard
-        FROM pair_counts
-        WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.5
-    ), pairs AS (
-        SELECT least(ma.id, mb.id) AS id_a, greatest(ma.id, mb.id) AS id_b,
-               rp.n_common, rp.jaccard
-        FROM rep_pairs rp
-        JOIN members ma ON ma.rep = rp.id_a
-        JOIN members mb ON mb.rep = rp.id_b
-        UNION ALL
-        SELECT m1.id AS id_a, m2.id AS id_b,
-               CAST(m1.set_size AS BIGINT) AS n_common, 1.0 AS jaccard
-        FROM members m1 JOIN members m2 USING (set_fp)
-        WHERE m1.id < m2.id
-    )
+        SELECT id_a, id_b, n_common, {_JACCARD_SQL}
+        FROM pair_counts WHERE {_JACCARD_MIN_SQL.format(t=0.5)}
+    ), {_expanded_pairs(0.5)}
 """
+
 
 def _collapsed_pairs_sql(threshold: float, frac_cap: float | None = None) -> str:
     """Collapse-based DuckDB twin of ngram_jaccard_pairs (optionally
@@ -680,68 +674,35 @@ def _collapsed_pairs_sql(threshold: float, frac_cap: float | None = None) -> str
     driver oracles) but linear in clone-family size, which is what makes
     the 100× replicated fixture tractable for the oracle side too. The
     df-cap, when present, is computed on the FULL postings before the
-    collapse (the contract counts every document), and the collapse key
-    includes set_size (under a cap the filtered set can coincide while the
-    Jaccard denominator differs)."""
-    cap = ""
-    if frac_cap is not None:
-        cap = f""", capped AS MATERIALIZED (
-        SELECT id, set_size, shingle FROM (
-            SELECT id, set_size, shingle,
-                   count(*) OVER (PARTITION BY shingle) AS df
-            FROM postings
-        )
-        WHERE df <= greatest(CAST(ceil({frac_cap} * (SELECT count(*) FROM documents)) AS BIGINT), 1)
-    )"""
+    collapse (the contract counts every document)."""
     src = "capped" if frac_cap is not None else "postings"
     return f"""
-    WITH sets AS MATERIALIZED (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
+    WITH {_shingle_ctes(cap=frac_cap, materialized=True)}, {_collapse_ctes(src)}, rep_pairs AS (
+        SELECT id_a, id_b, n_common, {_JACCARD_SQL}
+        FROM ({_pair_counts("rpost")}
+        ) WHERE {_JACCARD_MIN_SQL.format(t=threshold)}
+    ), {_expanded_pairs(threshold)}
+    SELECT id_a, id_b, n_common, jaccard FROM pairs
+    """
+
+
+# TEXT-level pre-collapse of the shingle head: ``tfam`` keys each distinct
+# text by its min doc_id ``trep`` and family size ``tg``, and only those
+# texts are shingled into ``sets``/``postings`` (which carry tg).
+# Shingling is the dominant cost, and the GROUP BY also re-parallelizes
+# DuckDB's pipeline, which is otherwise limited to the fixture file's few
+# row groups.
+_TEXT_FAMILY_CTES = f"""tfam AS MATERIALIZED (
+        SELECT text, min(doc_id) AS trep, CAST(count(*) AS BIGINT) AS tg
         FROM documents
         WHERE len({_TOKS_SQL}) >= 3
+        GROUP BY text
+    ), sets AS MATERIALIZED (
+        SELECT trep AS id, tg, {_SHINGLES_SQL} AS shingles FROM tfam
     ), postings AS MATERIALIZED (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
+        SELECT id, tg, len(shingles) AS set_size, unnest(shingles) AS shingle
         FROM sets WHERE len(shingles) > 0
-    ){cap}, set_fps AS (
-        SELECT id, set_size, count(*) AS n_kept,
-               concat(bit_xor(hash(shingle)), ':', sum(hash(shingle)::HUGEINT), ':', count(*)) AS set_fp
-        FROM {src} GROUP BY id, set_size
-    ), reps AS (
-        SELECT set_fp, set_size, min(id) AS rep FROM set_fps GROUP BY 1, 2
-    ), members AS MATERIALIZED (
-        SELECT s.set_fp, s.set_size, s.id, s.n_kept, r.rep
-        FROM set_fps s JOIN reps r USING (set_fp, set_size)
-    ), rpost AS MATERIALIZED (
-        SELECT p.id, p.set_size, p.shingle
-        FROM {src} p JOIN (SELECT DISTINCT rep FROM reps) r ON p.id = r.rep
-    ), rep_pairs AS (
-        SELECT id_a, id_b, n_common,
-               (CAST((n_common * 1000000) // (size_a + size_b - n_common) AS DOUBLE)
-               / 1000000.0) AS jaccard
-        FROM (
-            SELECT a.id AS id_a, b.id AS id_b,
-                   a.set_size AS size_a, b.set_size AS size_b,
-                   count(*) AS n_common
-            FROM rpost a JOIN rpost b USING (shingle)
-            WHERE a.id < b.id
-            GROUP BY 1, 2, 3, 4
-        )
-        WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= {threshold}
-    )
-    SELECT least(ma.id, mb.id) AS id_a, greatest(ma.id, mb.id) AS id_b,
-           rp.n_common, rp.jaccard
-    FROM rep_pairs rp
-    JOIN members ma ON ma.rep = rp.id_a
-    JOIN members mb ON mb.rep = rp.id_b
-    UNION ALL
-    SELECT m1.id AS id_a, m2.id AS id_b,
-           CAST(m1.n_kept AS BIGINT) AS n_common,
-           (CAST((m1.n_kept * 1000000) // (2 * m1.set_size - m1.n_kept) AS DOUBLE)
-           / 1000000.0) AS jaccard
-    FROM members m1 JOIN members m2 USING (set_fp, set_size)
-    WHERE m1.id < m2.id
-      AND CAST(m1.n_kept AS DOUBLE) / (2 * m1.set_size - m1.n_kept) >= {threshold}
-    """
+    )"""
 
 
 def _collapsed_containment_sql(threshold: float, frac_cap: float | None = None) -> str:
@@ -770,21 +731,11 @@ def _collapsed_containment_sql(threshold: float, frac_cap: float | None = None) 
                    sum(tg) OVER (PARTITION BY shingle) AS df
             FROM postings
         )
-        WHERE df <= greatest(CAST(ceil({frac_cap} * (SELECT count(*) FROM documents)) AS BIGINT), 1)
+        WHERE df <= {_DOC_CAP_SQL.format(frac=frac_cap)}
     )"""
     src = "capped" if frac_cap is not None else "postings"
     return f"""
-    WITH tfam AS MATERIALIZED (
-        SELECT text, min(doc_id) AS trep, CAST(count(*) AS BIGINT) AS tg
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-        GROUP BY text
-    ), sets AS MATERIALIZED (
-        SELECT trep AS id, tg, {_SHINGLES_SQL} AS shingles FROM tfam
-    ), postings AS MATERIALIZED (
-        SELECT id, tg, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ){cap}, set_fps AS MATERIALIZED (
+    WITH {_TEXT_FAMILY_CTES}{cap}, set_fps AS MATERIALIZED (
         SELECT id, set_size, count(*) AS n_kept,
                concat(bit_xor(hash(shingle)), ':', sum(hash(shingle)::HUGEINT), ':', count(*)) AS set_fp
         FROM {src} GROUP BY id, set_size
@@ -801,13 +752,7 @@ def _collapsed_containment_sql(threshold: float, frac_cap: float | None = None) 
     ), rpost AS MATERIALIZED (
         SELECT p.id, p.set_size, p.shingle
         FROM {src} p JOIN (SELECT DISTINCT rep FROM sreps) r ON p.id = r.rep
-    ), rep_counts AS MATERIALIZED (
-        SELECT a.id AS id_a, b.id AS id_b,
-               a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM rpost a JOIN rpost b USING (shingle)
-        WHERE a.id < b.id
-        GROUP BY 1, 2, 3, 4
+    ), rep_counts AS MATERIALIZED ({_pair_counts("rpost")}
     ), rep_dir AS (
         SELECT id_a AS src, id_b AS dst, n_common, size_a AS src_size
         FROM rep_counts
@@ -845,27 +790,14 @@ def _semdedup_scale_oracle(rounds: int = 12) -> str:
     label is min-rep = min-member-id, replayed by ``rounds`` unrolled
     pointer-jumping label steps (diameter ≤ 2^rounds) instead of the
     recursive closure that is quadratic in family size."""
-    sql = f"""
-    WITH e0 AS MATERIALIZED (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), vreps AS MATERIALIZED (
-        SELECT v, min(vec_id) AS rep, count(*) AS g FROM e0 GROUP BY v
-    ), vmembers AS MATERIALIZED (
-        SELECT e0.vec_id AS id, r.rep FROM e0 JOIN vreps r ON e0.v = r.v
-    ), e AS MATERIALIZED (
+    return f"""
+    WITH {_VECTOR_FAMILY_CTES}, e AS MATERIALIZED (
         SELECT rep AS id, v, g FROM vreps
-    ), u AS (
-        SELECT id, i, v[i] AS x, g FROM e, unnest(range(1, len(v)+1)) AS t(i)
-    ), stats AS (
-        -- clones contribute no new values: the rep-level envelope equals
-        -- the full-data envelope
-        SELECT i, min(x) AS mn, max(x) AS mx FROM u GROUP BY i
-    ), codes AS MATERIALIZED (
-        SELECT id, i, g,
-               CAST(floor((x - mn) * 255.0
-                    / (CASE WHEN mx = mn THEN 1.0 ELSE mx - mn END) + 0.5)
-                    AS BIGINT) AS code
-        FROM u JOIN stats USING (i)
+    ), {_int8_ctes("e")}, codes AS MATERIALIZED (
+        -- stats runs over the reps: clones contribute no new values, so
+        -- the rep-level envelope equals the full-data envelope
+        SELECT id, i, g, CAST({_INT8_CODE_SQL} AS BIGINT) AS code
+        FROM u JOIN stats USING (i) JOIN e USING (id)
     ), seed_ids AS (
         SELECT id, CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS j
         FROM (SELECT DISTINCT id FROM vmembers) ORDER BY id LIMIT 8
@@ -907,34 +839,15 @@ def _semdedup_scale_oracle(rounds: int = 12) -> str:
         FROM cv x JOIN cv y USING (cluster)
         WHERE x.id < y.id
           AND {_COS_SQL.format(a="x.v", b="y.v")} >= 0.4
-    ), redges AS MATERIALIZED (
-        SELECT id_a AS s, id_b AS d FROM rep_pairs
-        UNION ALL
-        SELECT id_b, id_a FROM rep_pairs
     ), lab0 AS MATERIALIZED (
         SELECT rep AS id, rep AS lab FROM vreps
-    )"""
-    prev = "lab0"
-    for k in range(1, rounds + 1):
-        sql += f""",
-    nmin{k} AS MATERIALIZED (
-        SELECT l.id, least(l.lab, coalesce(min(n.lab), l.lab)) AS lab
-        FROM {prev} l
-        LEFT JOIN redges ed ON ed.s = l.id
-        LEFT JOIN {prev} n ON n.id = ed.d
-        GROUP BY l.id, l.lab
-    ), lab{k} AS MATERIALIZED (
-        SELECT a.id, b.lab FROM nmin{k} a JOIN nmin{k} b ON b.id = a.lab
-    )"""
-        prev = f"lab{k}"
-    return sql + f""",
-    connected AS (SELECT DISTINCT s AS rep FROM redges),
+    ){_min_label_ctes(rounds)},
     fam AS (
         -- a member is in a duplicate family iff its rep group has >= 2
         -- members (internal cos-1.0 edges) or its rep has a cross edge
         SELECT r.rep, l.lab AS family
         FROM vreps r
-        JOIN {prev} l ON l.id = r.rep
+        JOIN lab{rounds} l ON l.id = r.rep
         LEFT JOIN connected c ON c.rep = r.rep
         WHERE r.g >= 2 OR c.rep IS NOT NULL
     )
@@ -947,74 +860,56 @@ def _semdedup_scale_oracle(rounds: int = 12) -> str:
     """
 
 
-def _clusters_scale_oracle(rounds: int = 12) -> str:
-    """At-scale DuckDB stand-in for dedup_clusters' recursive-CTE oracle:
-    the transitive-closure CTE materializes O(Σ component²) reach rows
-    (hopeless once near-dup families chain), so at replicated fixtures we
-    replay the same public algorithm the Spark side runs — identical-set
-    collapse, rep-level similarity edges, then min-label propagation WITH
-    pointer jumping (label := label[label] each round, so ``rounds`` = 12
-    covers any component diameter ≤ 2^12). Non-convergence cannot pass
-    silently: labels would differ from the driver oracle's closure and the
-    value hash would MISMATCH."""
-    sql = f"""
-    WITH sets AS MATERIALIZED (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS MATERIALIZED (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), set_fps AS (
-        SELECT id, set_size,
-               concat(bit_xor(hash(shingle)), ':', sum(hash(shingle)::HUGEINT), ':', count(*)) AS set_fp
-        FROM postings GROUP BY id, set_size
-    ), reps AS (
-        SELECT set_fp, set_size, min(id) AS rep FROM set_fps GROUP BY 1, 2
-    ), members AS MATERIALIZED (
-        SELECT s.set_fp, s.id, r.rep FROM set_fps s
-        JOIN reps r USING (set_fp, set_size)
-    ), rpost AS MATERIALIZED (
-        SELECT p.id, p.set_size, p.shingle
-        FROM postings p JOIN (SELECT DISTINCT rep FROM reps) r ON p.id = r.rep
-    ), rep_pairs AS MATERIALIZED (
-        SELECT id_a, id_b FROM (
-            SELECT a.id AS id_a, b.id AS id_b,
-                   a.set_size AS size_a, b.set_size AS size_b,
-                   count(*) AS n_common
-            FROM rpost a JOIN rpost b USING (shingle)
-            WHERE a.id < b.id
-            GROUP BY 1, 2, 3, 4
-        ) WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.05
-    ), redges AS MATERIALIZED (
+def _min_label_ctes(rounds: int) -> str:
+    """Connected components of the representatives' similarity graph
+    ``rep_pairs(id_a, id_b)``, continuing a chain that defines ``lab0(id,
+    lab)``: min-label propagation WITH pointer jumping (label :=
+    label[label] each round, so ``rounds`` covers any component diameter
+    ≤ 2^rounds) into ``lab{rounds}``; ``redges`` holds both edge
+    directions and ``connected`` the reps with an edge. Non-convergence
+    cannot pass silently: labels would differ from the driver oracle's
+    closure and the value hash would MISMATCH."""
+    sql = """, redges AS MATERIALIZED (
         SELECT id_a AS s, id_b AS d FROM rep_pairs
         UNION ALL
         SELECT id_b, id_a FROM rep_pairs
-    ), lab0 AS MATERIALIZED (
-        SELECT DISTINCT rep AS id, rep AS lab FROM reps
     )"""
     prev = "lab0"
     for k in range(1, rounds + 1):
-        sql += f""",
-    nmin{k} AS MATERIALIZED (
+        sql += f""", nmin{k} AS MATERIALIZED (
         SELECT l.id, least(l.lab, coalesce(min(n.lab), l.lab)) AS lab
         FROM {prev} l
-        LEFT JOIN redges e ON e.s = l.id
-        LEFT JOIN {prev} n ON n.id = e.d
+        LEFT JOIN redges ed ON ed.s = l.id
+        LEFT JOIN {prev} n ON n.id = ed.d
         GROUP BY l.id, l.lab
     ), lab{k} AS MATERIALIZED (
         SELECT a.id, b.lab FROM nmin{k} a JOIN nmin{k} b ON b.id = a.lab
     )"""
         prev = f"lab{k}"
-    return sql + f""",
-    gsize AS (SELECT rep, count(*) AS g FROM members GROUP BY rep),
-    connected AS (SELECT DISTINCT s AS rep FROM redges)
+    return sql + ", connected AS (SELECT DISTINCT s AS rep FROM redges)"
+
+
+def _clusters_scale_oracle(rounds: int = 12) -> str:
+    """At-scale DuckDB stand-in for dedup_clusters' recursive-CTE oracle:
+    the transitive-closure CTE materializes O(Σ component²) reach rows
+    (hopeless once near-dup families chain), so at replicated fixtures we
+    replay the same public algorithm the Spark side runs — identical-set
+    collapse, rep-level similarity edges, then min-label propagation with
+    pointer jumping (``_min_label_ctes``)."""
+    return f"""
+    WITH {_shingle_ctes(materialized=True)}, {_collapse_ctes("postings")}, rep_pairs AS MATERIALIZED (
+        SELECT id_a, id_b FROM ({_pair_counts("rpost")}
+        ) WHERE {_JACCARD_MIN_SQL.format(t=0.05)}
+    ), lab0 AS MATERIALIZED (
+        SELECT DISTINCT rep AS id, rep AS lab FROM reps
+    ){_min_label_ctes(rounds)},
+    gsize AS (SELECT rep, count(*) AS g FROM members GROUP BY rep)
     -- only docs that appear in >= 1 similarity pair: members of a >= 2
     -- clone group (within-group pairs at Jaccard 1) or of a rep with a
     -- cross-group edge — matching connected_components' node set
     SELECT m.id AS doc_id, l.lab AS cluster_id
     FROM members m
-    JOIN {prev} l ON l.id = m.rep
+    JOIN lab{rounds} l ON l.id = m.rep
     JOIN gsize gs ON gs.rep = m.rep
     LEFT JOIN connected c ON c.rep = m.rep
     WHERE gs.g >= 2 OR c.rep IS NOT NULL
@@ -1053,7 +948,104 @@ _COS_SQL = (
     " * sqrt(list_dot_product({b}, {b}))), 5)"
 )
 
+# The embeddings as DOUBLE[] vectors: ``e(id, v)``, and ``e(vec_id, v)``
+# with its LSH buckets ``bkt(vec_id, bucket)``.
+_EMBED_CTE = """e AS (
+        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    )"""
+_EMBED_LSH_CTES = """e AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ), """ + _LSH_BUCKET_CTES.strip()
 
+# Identical-VECTOR collapse: ``vreps(v, rep, g)`` holds each distinct
+# vector with its min id and family size, ``vmembers(id, rep)`` maps every
+# id to its family's rep. Identical vectors share codes, buckets and every
+# cosine, so the collapsed oracles work at rep level and expand after.
+_VECTOR_FAMILY_CTES = """e0 AS MATERIALIZED (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ), vreps AS MATERIALIZED (
+        SELECT v, min(vec_id) AS rep, count(*) AS g FROM e0 GROUP BY v
+    ), vmembers AS MATERIALIZED (
+        SELECT e0.vec_id AS id, r.rep FROM e0 JOIN vreps r ON e0.v = r.v
+    )"""
+
+# int8 code of ``x`` in its dimension's [mn, mx]: the rng guard of
+# similarity.quantize_embeddings codes a degenerate dimension (mx = mn)
+# to 0 instead of dividing by zero.
+_INT8_CODE_SQL = (
+    "floor((x - mn) * 255.0 / (CASE WHEN mx = mn THEN 1.0 ELSE mx - mn END) + 0.5)"
+)
+
+
+def _int8_ctes(src: str, dequantize: bool = False) -> str:
+    """Per-dimension int8 scalar quantization of the vectors ``src(id, v)``
+    (similarity.quantize_embeddings): ``u(id, i, x)`` flattens them and
+    ``stats(i, mn, mx)`` holds each dimension's envelope, against which
+    ``_INT8_CODE_SQL`` codes an ``x``. With ``dequantize``, also ``codes``
+    and ``deq(id, v)``: the reconstruction mn + code·step, step = rng/255,
+    the IEEE op sequence of similarity.dequantize_embeddings, so the
+    doubles are bit-identical."""
+    sql = f"""u AS (
+        SELECT id, i, v[i] AS x FROM {src}, unnest(range(1, len(v)+1)) AS t(i)
+    ), stats AS (
+        SELECT i, min(x) AS mn, max(x) AS mx FROM u GROUP BY i
+    )"""
+    if dequantize:
+        sql += f""", codes AS (
+        SELECT id, i, {_INT8_CODE_SQL} AS code, mn,
+               CASE WHEN mx = mn THEN mn + 1.0 ELSE mx END AS mx
+        FROM u JOIN stats USING (i)
+    ), deq AS (
+        SELECT id, list(mn + code * ((mx - mn) / 255.0) ORDER BY i) AS v
+        FROM codes GROUP BY id
+    )"""
+    return sql
+
+
+# Exact cosine top-5 of the queries (id % 50 = 0) over ``{src}(id, v)``,
+# self excluded, by (cos DESC, id): ``(q_id, c_id)`` rows.
+_COS_TOP5_SQL = f"""
+        SELECT q_id, c_id FROM (
+            SELECT q.id AS q_id, c.id AS c_id,
+                   row_number() OVER (
+                       PARTITION BY q.id
+                       ORDER BY {_COS_SQL.format(a="q.v", b="c.v")} DESC,
+                                c.id
+                   ) AS rnk
+            FROM {{src}} q CROSS JOIN {{src}} c
+            WHERE q.id % 50 = 0 AND c.id <> q.id
+        ) WHERE rnk <= 5
+"""
+
+# Hamming-1 multiprobe over ``e(vec_id, v)`` and its buckets ``bkt``: each
+# query (vec_id % 50 = 0) probes its bucket and the 4 single-bit flips,
+# and ``pairs(q_id, c_id, bucket, cos)`` scores every corpus vector in a
+# probed bucket; ``_IVF_TOP5_SQL`` keeps the 5 best per query.
+_IVF_PAIRS_CTES = f"""c AS (
+        SELECT e.vec_id AS c_id, e.v AS cv, b.bucket
+        FROM e JOIN bkt b USING (vec_id)
+    ), qv AS (
+        SELECT e.vec_id AS q_id, e.v AS qv, b.bucket
+        FROM e JOIN bkt b USING (vec_id)
+        WHERE e.vec_id % 50 = 0
+    ), probes AS (
+        SELECT q_id, qv,
+               unnest([bucket, xor(bucket, 1), xor(bucket, 2),
+                       xor(bucket, 4), xor(bucket, 8)]) AS bucket
+        FROM qv
+    ), pairs AS (
+        SELECT p.q_id, c.c_id, c.bucket,
+               {_COS_SQL.format(a="p.qv", b="c.cv")} AS cos
+        FROM probes p JOIN c USING (bucket)
+        WHERE c.c_id <> p.q_id
+    )"""
+_IVF_TOP5_SQL = """
+    SELECT q_id, c_id, bucket, cos, CAST(rnk AS BIGINT) AS rank FROM (
+        SELECT q_id, c_id, bucket, cos,
+               row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
+        FROM pairs
+    ) WHERE rnk <= 5
+    """
 
 
 def _collapsed_minhash_scale_oracle(frac_cap: float | None = None) -> str:
@@ -1078,64 +1070,21 @@ def _collapsed_minhash_scale_oracle(frac_cap: float | None = None) -> str:
         SELECT band, bucket
         FROM bands b JOIN famsz f ON f.rep = b.id
         GROUP BY band, bucket
-        HAVING sum(f.g) <= greatest(
-            CAST(ceil({frac_cap} * (SELECT count(*) FROM documents)) AS BIGINT), 1)
+        HAVING sum(f.g) <= {_DOC_CAP_SQL.format(frac=frac_cap)}
     ), survivors AS (
         SELECT DISTINCT b.id AS rep FROM bands b JOIN cool USING (band, bucket)
     )"""
         cand_cool = "JOIN cool USING (band, bucket)\n        "
         within_cool = "JOIN survivors s ON s.rep = m1.rep\n    "
     return f"""
-    WITH sets AS MATERIALIZED (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS MATERIALIZED (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), set_fps AS (
-        SELECT id, set_size,
-               concat(bit_xor(hash(shingle)), ':', sum(hash(shingle)::HUGEINT), ':', count(*)) AS set_fp
-        FROM postings GROUP BY id, set_size
-    ), reps AS (
-        SELECT set_fp, set_size, min(id) AS rep FROM set_fps GROUP BY 1, 2
-    ), members AS MATERIALIZED (
-        SELECT s.set_fp, s.set_size, s.id, r.rep
-        FROM set_fps s JOIN reps r USING (set_fp, set_size)
-    ), rpost AS MATERIALIZED (
-        SELECT p.id, p.set_size, p.shingle
-        FROM postings p JOIN (SELECT DISTINCT rep FROM reps) r ON p.id = r.rep
-    ), hashed AS (
-        SELECT id, set_size, shingle,
-               {_H60.format(e="shingle")} % 2147483647 AS h0
-        FROM rpost
-    ), seeds AS (
-        SELECT * FROM (VALUES {_MH_SEED_VALUES}) t(seed, a, b)
-    ), sigs AS (
-        SELECT id, seed, min((s.a * h0 + s.b) % 2147483647) AS h
-        FROM hashed CROSS JOIN seeds s
-        GROUP BY id, seed
-    ), bands AS (
-        SELECT id, CAST(seed // 4 AS INT) AS band,
-               string_agg(CAST(h AS VARCHAR), '|' ORDER BY seed) AS bucket
-        FROM sigs GROUP BY 1, 2
-    ){cap_ctes}, cand AS (
+    WITH {_shingle_ctes(materialized=True)}, {_collapse_ctes("postings")}, {_minhash_ctes("rpost")}{cap_ctes}, cand AS (
         SELECT DISTINCT x.id AS id_a, y.id AS id_b
         FROM bands x JOIN bands y USING (band, bucket)
         {cand_cool}WHERE x.id < y.id
-    ), pair_counts AS (
-        SELECT c.id_a, c.id_b, a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM cand c
-        JOIN rpost a ON a.id = c.id_a
-        JOIN rpost b ON b.id = c.id_b AND b.shingle = a.shingle
-        GROUP BY 1, 2, 3, 4
+    ), pair_counts AS ({_cand_counts("rpost")}
     ), rep_pairs AS (
-        SELECT id_a, id_b,
-               (CAST((n_common * 1000000) // (size_a + size_b - n_common) AS DOUBLE)
-               / 1000000.0) AS jaccard
-        FROM pair_counts
-        WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.3
+        SELECT id_a, id_b, {_JACCARD_SQL}
+        FROM pair_counts WHERE {_JACCARD_MIN_SQL.format(t=0.3)}
     )
     SELECT least(ma.id, mb.id) AS id_a, greatest(ma.id, mb.id) AS id_b, rp.jaccard
     FROM rep_pairs rp
@@ -1168,22 +1117,7 @@ def _pagerank_scale_oracle(iters: int = 8, scale: int = 10**12) -> str:
     df-cap and thresholds replicate the naive oracle's expressions exactly
     (df as Σ family sizes; the SAME double-division comparison)."""
     head = f"""
-    WITH tfam AS MATERIALIZED (
-        -- TEXT-level pre-collapse first (the containment-oracle r8
-        -- lesson): shingling is the dominant cost and must run over
-        -- DISTINCT texts only; the GROUP BY also re-parallelizes DuckDB's
-        -- pipeline, which is otherwise limited to the fixture file's few
-        -- row groups
-        SELECT text, min(doc_id) AS trep, CAST(count(*) AS BIGINT) AS tg
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-        GROUP BY text
-    ), sets AS MATERIALIZED (
-        SELECT trep AS id, tg, {_SHINGLES_SQL} AS shingles FROM tfam
-    ), postings AS MATERIALIZED (
-        SELECT id, tg, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), set_fps AS MATERIALIZED (
+    WITH {_TEXT_FAMILY_CTES}, set_fps AS MATERIALIZED (
         -- MATERIALIZED throughout: non-materialized CTEs inline PER
         -- REFERENCE in DuckDB, re-running the fingerprint aggregation for
         -- every reference (the r8 100x oracle hang). Collapse key is the
@@ -1207,20 +1141,14 @@ def _pagerank_scale_oracle(iters: int = 8, scale: int = 10**12) -> str:
     ), dfs AS MATERIALIZED (
         SELECT shingle, sum(g) AS df FROM rpost GROUP BY 1
     ), capped AS MATERIALIZED (
-        SELECT rp.rep, rp.set_size, rp.g, rp.shingle
+        SELECT rp.rep AS id, rp.set_size, rp.shingle
         FROM rpost rp JOIN dfs USING (shingle)
-        WHERE dfs.df <= greatest(CAST(ceil(0.02 * (SELECT count(*) FROM documents)) AS BIGINT), 1)
+        WHERE dfs.df <= {_DOC_CAP_SQL.format(frac=0.02)}
     ), surv AS MATERIALIZED (
-        SELECT rep, CAST(count(*) AS BIGINT) AS s FROM capped GROUP BY 1
+        SELECT id AS rep, CAST(count(*) AS BIGINT) AS s FROM capped GROUP BY 1
     ), xedges AS MATERIALIZED (
-        SELECT id_a, id_b FROM (
-            SELECT a.rep AS id_a, b.rep AS id_b,
-                   a.set_size AS size_a, b.set_size AS size_b,
-                   count(*) AS n_common
-            FROM capped a JOIN capped b USING (shingle)
-            WHERE a.rep < b.rep
-            GROUP BY 1, 2, 3, 4
-        ) WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.3
+        SELECT id_a, id_b FROM ({_pair_counts("capped")}
+        ) WHERE {_JACCARD_MIN_SQL.format(t=0.3)}
     ), within AS MATERIALIZED (
         SELECT r.rep FROM reps r JOIN surv s USING (rep)
         WHERE r.g >= 2
@@ -1272,6 +1200,28 @@ def _pagerank_scale_oracle(iters: int = 8, scale: int = 10**12) -> str:
     """
 
 
+# The quantized-agreement stand-in's top-5 per query member, rebuilt from
+# rep-level cosines ``{src}(q_rep, c_rep, cos, g)``: candidate families
+# with a strictly-better doc mass >= 7 are pruned first, and only a
+# family's 7 smallest member ids (``mem7``) can surface.
+_REP_TOP5_SQL = """
+        SELECT q_id, c_id FROM (
+            SELECT qm.id AS q_id, m7.id AS c_id,
+                   row_number() OVER (PARTITION BY qm.id
+                                      ORDER BY p.cos DESC, m7.id) AS rnk
+            FROM (SELECT id, rep FROM vmembers WHERE id % 50 = 0) qm
+            JOIN (
+                SELECT q_rep, c_rep, cos FROM (
+                    SELECT q_rep, c_rep, cos,
+                           sum(g) OVER (PARTITION BY q_rep ORDER BY cos DESC
+                                        RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                           - sum(g) OVER (PARTITION BY q_rep, cos) AS better
+                    FROM {src}
+                ) WHERE better < 7
+            ) p ON p.q_rep = qm.rep
+            JOIN mem7 m7 ON m7.rep = p.c_rep AND m7.id <> qm.id
+        ) WHERE rnk <= 5"""
+
 SCALE_ORACLES: dict[str, str] = {
     "graph_pagerank_simgraph": _pagerank_scale_oracle(),
     "dedup_jaccard_prefix": _PREFIX_PAIRS_CTES
@@ -1286,27 +1236,19 @@ SCALE_ORACLES: dict[str, str] = {
     # driver oracle (verified at sf0.01 and 10×: byte-equal, 142 s → 7.8 s)
     # while shingling only DISTINCT texts.
     "doc_ngram_novelty": f"""
-    WITH t0 AS MATERIALIZED (
-        SELECT doc_id, text FROM documents WHERE len({_TOKS_SQL}) >= 3
-    ), fam AS MATERIALIZED (
-        SELECT text, min(doc_id) AS rep FROM t0 GROUP BY text
-    ), reps AS (
-        SELECT rep AS id, {_SHINGLES_SQL} AS shingles FROM fam
-    ), posts AS (
-        SELECT id, unnest(shingles) AS shingle FROM reps WHERE len(shingles) > 0
-    ), firsts AS (
-        SELECT shingle, min(id) AS first_id FROM posts GROUP BY 1
+    WITH {_TEXT_FAMILY_CTES}, firsts AS (
+        SELECT shingle, min(id) AS first_id FROM postings GROUP BY 1
     ), repstats AS (
         SELECT id, CAST(count(*) AS BIGINT) AS n_shingles,
                CAST(sum(CASE WHEN first_id = id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
-        FROM posts JOIN firsts USING (shingle) GROUP BY id
+        FROM postings JOIN firsts USING (shingle) GROUP BY id
     )
     SELECT d.doc_id,
            r.n_shingles,
-           CASE WHEN d.doc_id = f.rep THEN r.n_novel ELSE 0 END AS n_novel,
-           CASE WHEN d.doc_id = f.rep THEN (10000 * r.n_novel) // r.n_shingles
+           CASE WHEN d.doc_id = f.trep THEN r.n_novel ELSE 0 END AS n_novel,
+           CASE WHEN d.doc_id = f.trep THEN (10000 * r.n_novel) // r.n_shingles
                 ELSE 0 END AS novelty_bp
-    FROM t0 d JOIN fam f ON f.text = d.text JOIN repstats r ON r.id = f.rep
+    FROM documents d JOIN tfam f ON f.text = d.text JOIN repstats r ON r.id = f.trep
     """,
     "dedup_clusters": _clusters_scale_oracle(),
     "embed_semdedup_prune": _semdedup_scale_oracle(),
@@ -1353,18 +1295,10 @@ SCALE_ORACLES: dict[str, str] = {
     # representative; within-family pairs are cos = 1.0 exactly (round-5 of
     # a unit self-dot). Value-identical to the driver oracle, linear in
     # clone-family size where the naive in-bucket join is quadratic.
-    "embed_cosine_neardup": """
-    WITH e0 AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), vreps AS (
-        SELECT v, min(vec_id) AS rep FROM e0 GROUP BY v
-    ), vmembers AS MATERIALIZED (
-        SELECT e0.vec_id AS id, r.rep FROM e0 JOIN vreps r ON e0.v = r.v
-    ), e AS MATERIALIZED (
-        SELECT e0.vec_id, e0.v FROM e0 JOIN vreps r ON e0.vec_id = r.rep
-    ), """
-    + _LSH_BUCKET_CTES.strip()
-    + f""", m AS (
+    "embed_cosine_neardup": f"""
+    WITH {_VECTOR_FAMILY_CTES}, e AS MATERIALIZED (
+        SELECT rep AS vec_id, v FROM vreps
+    ), {_LSH_BUCKET_CTES.strip()}, m AS (
         SELECT e.vec_id, e.v, b.bucket FROM e JOIN bkt b USING (vec_id)
     ), rep_pairs AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -1401,81 +1335,31 @@ SCALE_ORACLES: dict[str, str] = {
     # all-pairs oracle while the cross product shrinks from (N/50)·N
     # member pairs to |families|² rep pairs.
     "embed_quantized_topk_agreement": f"""
-    WITH e0 AS (
-        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), fam AS MATERIALIZED (
-        SELECT v, min(id) AS rep, count(*) AS g FROM e0 GROUP BY v
-    ), members AS MATERIALIZED (
-        SELECT e0.id, f.rep FROM e0 JOIN fam f ON e0.v = f.v
+    WITH {_VECTOR_FAMILY_CTES}, e AS MATERIALIZED (
+        -- min/max over distinct vectors == min/max over all members
+        SELECT rep AS id, v, g FROM vreps
     ), mem7 AS MATERIALIZED (
         SELECT rep, id FROM (
             SELECT rep, id, row_number() OVER (PARTITION BY rep ORDER BY id) AS rn
-            FROM members
+            FROM vmembers
         ) WHERE rn <= 7
-    ), u AS (
-        SELECT rep AS id, i, v[i] AS x FROM fam, unnest(range(1, len(v)+1)) AS t(i)
-    ), stats AS (
-        -- min/max over distinct vectors == min/max over all members
-        SELECT i, min(x) AS mn, max(x) AS mx FROM u GROUP BY i
-    ), codes AS (
-        SELECT id, i,
-               floor((x - mn) * 255.0
-                     / (CASE WHEN mx = mn THEN 1.0 ELSE mx - mn END) + 0.5) AS code,
-               mn,
-               CASE WHEN mx = mn THEN mn + 1.0 ELSE mx END AS mx
-        FROM u JOIN stats USING (i)
-    ), deq AS MATERIALIZED (
-        SELECT id, list(mn + code * ((mx - mn) / 255.0) ORDER BY i) AS v
-        FROM codes GROUP BY id
-    ), qfams AS MATERIALIZED (
-        SELECT DISTINCT m.rep FROM members m WHERE m.id % 50 = 0
+    ), {_int8_ctes("e", dequantize=True)}, qfams AS MATERIALIZED (
+        SELECT DISTINCT m.rep FROM vmembers m WHERE m.id % 50 = 0
     ), rce AS MATERIALIZED (
-        SELECT qf.rep AS q_rep, c.rep AS c_rep,
+        SELECT qf.rep AS q_rep, c.id AS c_rep,
                {_COS_SQL.format(a="q.v", b="c.v")} AS cos, c.g
         FROM qfams qf
-        JOIN fam q ON q.rep = qf.rep
-        CROSS JOIN fam c
+        JOIN e q ON q.id = qf.rep
+        CROSS JOIN e c
     ), rcq AS MATERIALIZED (
-        SELECT qf.rep AS q_rep, cf.rep AS c_rep,
+        SELECT qf.rep AS q_rep, c.id AS c_rep,
                {_COS_SQL.format(a="q.v", b="c.v")} AS cos, cf.g
         FROM qfams qf
         JOIN deq q ON q.id = qf.rep
         CROSS JOIN deq c
-        JOIN fam cf ON cf.rep = c.id
-    ), pruned_e AS MATERIALIZED (
-        SELECT q_rep, c_rep, cos FROM (
-            SELECT q_rep, c_rep, cos,
-                   sum(g) OVER (PARTITION BY q_rep ORDER BY cos DESC
-                                RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - sum(g) OVER (PARTITION BY q_rep, cos) AS better
-            FROM rce
-        ) WHERE better < 7
-    ), pruned_q AS MATERIALIZED (
-        SELECT q_rep, c_rep, cos FROM (
-            SELECT q_rep, c_rep, cos,
-                   sum(g) OVER (PARTITION BY q_rep ORDER BY cos DESC
-                                RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - sum(g) OVER (PARTITION BY q_rep, cos) AS better
-            FROM rcq
-        ) WHERE better < 7
-    ), te AS MATERIALIZED (
-        SELECT q_id, c_id FROM (
-            SELECT qm.id AS q_id, m7.id AS c_id,
-                   row_number() OVER (PARTITION BY qm.id
-                                      ORDER BY p.cos DESC, m7.id) AS rnk
-            FROM (SELECT id, rep FROM members WHERE id % 50 = 0) qm
-            JOIN pruned_e p ON p.q_rep = qm.rep
-            JOIN mem7 m7 ON m7.rep = p.c_rep AND m7.id <> qm.id
-        ) WHERE rnk <= 5
-    ), tq AS MATERIALIZED (
-        SELECT q_id, c_id FROM (
-            SELECT qm.id AS q_id, m7.id AS c_id,
-                   row_number() OVER (PARTITION BY qm.id
-                                      ORDER BY p.cos DESC, m7.id) AS rnk
-            FROM (SELECT id, rep FROM members WHERE id % 50 = 0) qm
-            JOIN pruned_q p ON p.q_rep = qm.rep
-            JOIN mem7 m7 ON m7.rep = p.c_rep AND m7.id <> qm.id
-        ) WHERE rnk <= 5
+        JOIN e cf ON cf.id = c.id
+    ), te AS MATERIALIZED ({_REP_TOP5_SQL.format(src="rce")}
+    ), tq AS MATERIALIZED ({_REP_TOP5_SQL.format(src="rcq")}
     )
     SELECT te.q_id,
            CAST(sum(CASE WHEN tq.c_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -1487,41 +1371,9 @@ SCALE_ORACLES: dict[str, str] = {
     # the round-4 Spark builder; the naive expanded triangle join stays the
     # sf0.01 driver oracle
     "graph_triangle_census": f"""
-    WITH sets AS MATERIALIZED (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS MATERIALIZED (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), capped AS MATERIALIZED (
-        SELECT id, set_size, shingle FROM (
-            SELECT id, set_size, shingle,
-                   count(*) OVER (PARTITION BY shingle) AS df
-            FROM postings
-        )
-        WHERE df <= greatest(CAST(ceil(0.01 * (SELECT count(*) FROM documents)) AS BIGINT), 1)
-    ), set_fps AS (
-        SELECT id, set_size, count(*) AS n_kept,
-               concat(bit_xor(hash(shingle)), ':', sum(hash(shingle)::HUGEINT), ':', count(*)) AS set_fp
-        FROM capped GROUP BY id, set_size
-    ), reps AS (
-        SELECT set_fp, set_size, min(id) AS rep FROM set_fps GROUP BY 1, 2
-    ), members AS (
-        SELECT s.set_fp, s.set_size, s.id, s.n_kept, r.rep
-        FROM set_fps s JOIN reps r USING (set_fp, set_size)
-    ), rpost AS MATERIALIZED (
-        SELECT p.id, p.set_size, p.shingle
-        FROM capped p JOIN (SELECT DISTINCT rep FROM reps) r ON p.id = r.rep
-    ), rep_pairs AS MATERIALIZED (
-        SELECT id_a, id_b FROM (
-            SELECT a.id AS id_a, b.id AS id_b,
-                   a.set_size AS size_a, b.set_size AS size_b,
-                   count(*) AS n_common
-            FROM rpost a JOIN rpost b USING (shingle)
-            WHERE a.id < b.id
-            GROUP BY 1, 2, 3, 4
-        ) WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.05
+    WITH {_shingle_ctes(cap=0.01, materialized=True)}, {_collapse_ctes("capped")}, rep_pairs AS MATERIALIZED (
+        SELECT id_a, id_b FROM ({_pair_counts("rpost")}
+        ) WHERE {_JACCARD_MIN_SQL.format(t=0.05)}
     ), groups AS MATERIALIZED (
         SELECT rep, count(*) AS g,
                CASE WHEN CAST(any_value(n_kept) AS DOUBLE)
@@ -1624,46 +1476,14 @@ _SIMHASH_COMBO_VALUES = ", ".join(
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), hashed AS (
-        -- ONE md5 per posting; the 32 min-hashes are the affine universal
-        -- family (a_i*h + b_i) mod p over it — dedup._mh_ab coefficients
-        SELECT id, set_size, shingle,
-               {_H60.format(e="shingle")} % 2147483647 AS h0
-        FROM postings
-    ), seeds AS (
-        SELECT * FROM (VALUES {_MH_SEED_VALUES}) t(seed, a, b)
-    ), sigs AS (
-        SELECT id, seed, min((s.a * h0 + s.b) % 2147483647) AS h
-        FROM hashed CROSS JOIN seeds s
-        GROUP BY id, seed
-    ), bands AS (
-        SELECT id, CAST(seed // 4 AS INT) AS band,
-               string_agg(CAST(h AS VARCHAR), '|' ORDER BY seed) AS bucket
-        FROM sigs GROUP BY 1, 2
-    ), cand AS (
+    WITH {_shingle_ctes()}, {_minhash_ctes("postings")}, cand AS (
         SELECT DISTINCT x.id AS id_a, y.id AS id_b
         FROM bands x JOIN bands y USING (band, bucket)
         WHERE x.id < y.id
-    ), pair_counts AS (
-        SELECT c.id_a, c.id_b, a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM cand c
-        JOIN postings a ON a.id = c.id_a
-        JOIN postings b ON b.id = c.id_b AND b.shingle = a.shingle
-        GROUP BY 1, 2, 3, 4
+    ), pair_counts AS ({_cand_counts("postings")}
     )
-    SELECT id_a, id_b,
-           (CAST((n_common * 1000000) // (size_a + size_b - n_common) AS DOUBLE)
-               / 1000000.0) AS jaccard
-    FROM pair_counts
-    WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.3
+    SELECT id_a, id_b, {_JACCARD_SQL}
+    FROM pair_counts WHERE {_JACCARD_MIN_SQL.format(t=0.3)}
     """,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1685,55 +1505,24 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_lsh_capped",
     oracle=f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), hashed AS (
-        SELECT id, set_size, shingle,
-               {_H60.format(e="shingle")} % 2147483647 AS h0
-        FROM postings
-    ), seeds AS (
-        SELECT * FROM (VALUES {_MH_SEED_VALUES}) t(seed, a, b)
-    ), sigs AS (
-        SELECT id, seed, min((s.a * h0 + s.b) % 2147483647) AS h
-        FROM hashed CROSS JOIN seeds s
-        GROUP BY id, seed
-    ), bands AS (
-        SELECT id, CAST(seed // 4 AS INT) AS band,
-               string_agg(CAST(h AS VARCHAR), '|' ORDER BY seed) AS bucket
-        FROM sigs GROUP BY 1, 2
-    ), cool AS (
+    WITH {_shingle_ctes()}, {_minhash_ctes("postings")}, cool AS (
         -- the hot-bucket cap: buckets holding more documents than
         -- greatest(ceil(0.02 * n_docs), 1) are boilerplate noise and are
         -- dropped from candidate generation (same data-relative shape as
         -- the dedup_ngram_jaccard_capped df-cap)
         SELECT band, bucket FROM bands
         GROUP BY band, bucket
-        HAVING count(*) <= greatest(
-            CAST(ceil(0.02 * (SELECT count(*) FROM documents)) AS BIGINT), 1)
+        HAVING count(*) <= {_DOC_CAP_SQL.format(frac=0.02)}
     ), cand AS (
         SELECT DISTINCT x.id AS id_a, y.id AS id_b
         FROM bands x
         JOIN bands y USING (band, bucket)
         JOIN cool USING (band, bucket)
         WHERE x.id < y.id
-    ), pair_counts AS (
-        SELECT c.id_a, c.id_b, a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM cand c
-        JOIN postings a ON a.id = c.id_a
-        JOIN postings b ON b.id = c.id_b AND b.shingle = a.shingle
-        GROUP BY 1, 2, 3, 4
+    ), pair_counts AS ({_cand_counts("postings")}
     )
-    SELECT id_a, id_b,
-           (CAST((n_common * 1000000) // (size_a + size_b - n_common) AS DOUBLE)
-               / 1000000.0) AS jaccard
-    FROM pair_counts
-    WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.3
+    SELECT id_a, id_b, {_JACCARD_SQL}
+    FROM pair_counts WHERE {_JACCARD_MIN_SQL.format(t=0.3)}
     """,
 )
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1802,17 +1591,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embed_cosine_topk",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
         FROM embeddings WHERE vec_id % 50 = 0
     ), c AS (
         SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
     ), pairs AS (
-        SELECT q_id, c_id,
-               round(list_dot_product(qv, cv)
-                     / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))),
-                     5) AS cos
+        SELECT q_id, c_id, {_COS_SQL.format(a="qv", b="cv")} AS cos
         FROM q CROSS JOIN c
         WHERE q_id <> c_id
     ), ranked AS (
@@ -1833,33 +1619,7 @@ def embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embed_ann_ivf",
-    oracle=f"""
-    WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), {_LSH_BUCKET_CTES.strip()}, c AS (
-        SELECT e.vec_id AS c_id, e.v AS cv, b.bucket
-        FROM e JOIN bkt b USING (vec_id)
-    ), qv AS (
-        SELECT e.vec_id AS q_id, e.v AS qv, b.bucket
-        FROM e JOIN bkt b USING (vec_id)
-        WHERE e.vec_id % 50 = 0
-    ), probes AS (
-        SELECT q_id, qv,
-               unnest([bucket, xor(bucket, 1), xor(bucket, 2),
-                       xor(bucket, 4), xor(bucket, 8)]) AS bucket
-        FROM qv
-    ), pairs AS (
-        SELECT p.q_id, c.c_id, c.bucket,
-               {_COS_SQL.format(a="p.qv", b="c.cv")} AS cos
-        FROM probes p JOIN c USING (bucket)
-        WHERE c.c_id <> p.q_id
-    )
-    SELECT q_id, c_id, bucket, cos, CAST(rnk AS BIGINT) AS rank FROM (
-        SELECT q_id, c_id, bucket, cos,
-               row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-        FROM pairs
-    ) WHERE rnk <= 5
-    """,
+    oracle=f"WITH {_EMBED_LSH_CTES}, {_IVF_PAIRS_CTES}" + _IVF_TOP5_SQL,
 )
 def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF/LSH-bucketed approximate top-k with hamming-1 multiprobe: probe
@@ -1879,9 +1639,7 @@ def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embed_cosine_neardup",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), {_LSH_BUCKET_CTES.strip()}, m AS (
+    WITH {_EMBED_LSH_CTES}, m AS (
         SELECT e.vec_id, e.v, b.bucket FROM e JOIN bkt b USING (vec_id)
     ), pairs AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -1908,22 +1666,9 @@ def embed_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), sim_pairs AS (
-        SELECT id_a, id_b FROM (
-            SELECT a.id AS id_a, b.id AS id_b,
-                   a.set_size AS size_a, b.set_size AS size_b,
-                   count(*) AS n_common
-            FROM postings a JOIN postings b USING (shingle)
-            WHERE a.id < b.id
-            GROUP BY 1, 2, 3, 4
-        ) WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.05
+    WITH RECURSIVE {_shingle_ctes()}, sim_pairs AS (
+        SELECT id_a, id_b FROM ({_pair_counts("postings")}
+        ) WHERE {_JACCARD_MIN_SQL.format(t=0.05)}
     ), edges AS (
         SELECT id_a AS src, id_b AS dst FROM sim_pairs
         UNION
@@ -2077,14 +1822,8 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         WHERE df <= greatest(CAST(ceil(0.01 * (SELECT count(*) FROM keep1)) AS BIGINT), 1)
     ), sim_pairs AS (
-        SELECT id_a, id_b FROM (
-            SELECT a.id AS id_a, b.id AS id_b,
-                   a.set_size AS size_a, b.set_size AS size_b,
-                   count(*) AS n_common
-            FROM capped a JOIN capped b USING (shingle)
-            WHERE a.id < b.id
-            GROUP BY 1, 2, 3, 4
-        ) WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.05
+        SELECT id_a, id_b FROM ({_pair_counts("capped")}
+        ) WHERE {_JACCARD_MIN_SQL.format(t=0.05)}
     ), edges AS (
         SELECT id_a AS src, id_b AS dst FROM sim_pairs
         UNION
@@ -2458,30 +2197,9 @@ def _pagerank_fixed_sql(iters: int = 8, scale: int = 10**12) -> str:
     (contrib + dangling) from inlining exponentially (the BPE-oracle
     lesson)."""
     head = f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), capped AS (
-        SELECT id, set_size, shingle FROM (
-            SELECT id, set_size, shingle,
-                   count(*) OVER (PARTITION BY shingle) AS df
-            FROM postings
-        )
-        WHERE df <= greatest(CAST(ceil(0.02 * (SELECT count(*) FROM documents)) AS BIGINT), 1)
-    ), pair_counts AS (
-        SELECT a.id AS id_a, b.id AS id_b,
-               a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM capped a JOIN capped b USING (shingle)
-        WHERE a.id < b.id
-        GROUP BY 1, 2, 3, 4
+    WITH {_shingle_ctes(cap=0.02)}, pair_counts AS ({_pair_counts("capped")}
     ), pairs AS (
-        SELECT id_a, id_b FROM pair_counts
-        WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.3
+        SELECT id_a, id_b FROM pair_counts WHERE {_JACCARD_MIN_SQL.format(t=0.3)}
     ), edges AS MATERIALIZED (
         SELECT id_a AS src, id_b AS dst FROM pairs
         UNION ALL
@@ -2565,18 +2283,9 @@ def graph_pagerank_simgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact integer replay) — shared by embed_kmeans_assign and the SemDeDup
 # oracle (which prepends WITH RECURSIVE for its transitive closure).
 # Yields ``e(id, v)`` and ``d2(id, j, dist2)``.
-_KMEANS_FP_CTES = """
-    e AS (
-        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), u AS (
-        SELECT id, i, v[i] AS x FROM e, unnest(range(1, len(v)+1)) AS t(i)
-    ), stats AS (
-        SELECT i, min(x) AS mn, max(x) AS mx FROM u GROUP BY i
-    ), codes AS (
-        SELECT id, i,
-               CAST(floor((x - mn) * 255.0
-                    / (CASE WHEN mx = mn THEN 1.0 ELSE mx - mn END) + 0.5)
-                    AS BIGINT) AS code
+_KMEANS_FP_CTES = f"""
+    {_EMBED_CTE}, {_int8_ctes("e")}, codes AS (
+        SELECT id, i, CAST({_INT8_CODE_SQL} AS BIGINT) AS code
         FROM u JOIN stats USING (i)
     ), seed_ids AS (
         SELECT id, CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS j
@@ -2691,19 +2400,10 @@ def embed_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embed_quantize_int8",
-    oracle="""
-    WITH e AS (
-        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), u AS (
-        SELECT id, i, v[i] AS x FROM e, unnest(range(1, len(v)+1)) AS t(i)
-    ), stats AS (
-        SELECT i, min(x) AS mn, max(x) AS mx FROM u GROUP BY i
-    )
+    oracle=f"""
+    WITH {_EMBED_CTE}, {_int8_ctes("e")}
     SELECT id,
-           string_agg(
-               CAST(CAST(floor((x - mn) * 255.0
-                    / (CASE WHEN mx = mn THEN 1.0 ELSE mx - mn END) + 0.5)
-                    AS INT) AS VARCHAR), ',' ORDER BY i)
+           string_agg(CAST(CAST({_INT8_CODE_SQL} AS INT) AS VARCHAR), ',' ORDER BY i)
                AS codes_csv
     FROM u JOIN stats USING (i)
     GROUP BY id
@@ -2727,51 +2427,10 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embed_quantized_topk_agreement",
-    oracle="""
-    WITH e AS (
-        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), u AS (
-        SELECT id, i, v[i] AS x FROM e, unnest(range(1, len(v)+1)) AS t(i)
-    ), stats AS (
-        SELECT i, min(x) AS mn, max(x) AS mx FROM u GROUP BY i
-    ), codes AS (
-        -- rng guard mirrors similarity.quantize_embeddings: degenerate
-        -- dimensions (mx = mn) code to 0 instead of dividing by zero
-        SELECT id, i,
-               floor((x - mn) * 255.0
-                     / (CASE WHEN mx = mn THEN 1.0 ELSE mx - mn END) + 0.5) AS code,
-               mn,
-               CASE WHEN mx = mn THEN mn + 1.0 ELSE mx END AS mx
-        FROM u JOIN stats USING (i)
-    ), deq AS (
-        SELECT id, list(mn + code * ((mx - mn) / 255.0) ORDER BY i) AS v
-        FROM codes GROUP BY id
-    ), te AS (
-        SELECT q_id, c_id FROM (
-            SELECT q.id AS q_id, c.id AS c_id,
-                   row_number() OVER (
-                       PARTITION BY q.id
-                       ORDER BY round(list_dot_product(q.v, c.v)
-                                / (sqrt(list_dot_product(q.v, q.v))
-                                   * sqrt(list_dot_product(c.v, c.v))), 5) DESC,
-                                c.id
-                   ) AS rnk
-            FROM e q CROSS JOIN e c
-            WHERE q.id % 50 = 0 AND c.id <> q.id
-        ) WHERE rnk <= 5
-    ), tq AS (
-        SELECT q_id, c_id FROM (
-            SELECT q.id AS q_id, c.id AS c_id,
-                   row_number() OVER (
-                       PARTITION BY q.id
-                       ORDER BY round(list_dot_product(q.v, c.v)
-                                / (sqrt(list_dot_product(q.v, q.v))
-                                   * sqrt(list_dot_product(c.v, c.v))), 5) DESC,
-                                c.id
-                   ) AS rnk
-            FROM deq q CROSS JOIN deq c
-            WHERE q.id % 50 = 0 AND c.id <> q.id
-        ) WHERE rnk <= 5
+    oracle=f"""
+    WITH {_EMBED_CTE}, {_int8_ctes("e", dequantize=True)},
+    te AS ({_COS_TOP5_SQL.format(src="e")}
+    ), tq AS ({_COS_TOP5_SQL.format(src="deq")}
     )
     SELECT te.q_id,
            CAST(sum(CASE WHEN tq.c_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -3902,46 +3561,13 @@ def sketch_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH raw AS (
         SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), u0 AS (
-        SELECT id, i, v[i] AS x FROM raw, unnest(range(1, len(v)+1)) AS t(i)
-    ), stats AS (
-        SELECT i, min(x) AS mn, max(x) AS mx FROM u0 GROUP BY i
-    ), codes AS (
-        -- quantize_embeddings' exact IEEE op sequence, incl. the rng guard
-        SELECT id, i,
-               floor((x - mn) * 255.0
-                     / (CASE WHEN mx = mn THEN 1.0 ELSE mx - mn END) + 0.5) AS code,
-               mn,
-               CASE WHEN mx = mn THEN mn + 1.0 ELSE mx END AS mx
-        FROM u0 JOIN stats USING (i)
     ), e AS (
-        -- dequantize: mn + code·step, step = rng/255 — bit-identical doubles
-        SELECT id AS vec_id, list(mn + code * ((mx - mn) / 255.0) ORDER BY i) AS v
-        FROM codes GROUP BY id
-    ), {_LSH_BUCKET_CTES.strip()}, c AS (
-        SELECT e.vec_id AS c_id, e.v AS cv, b.bucket
-        FROM e JOIN bkt b USING (vec_id)
-    ), qv AS (
-        SELECT e.vec_id AS q_id, e.v AS qv, b.bucket
-        FROM e JOIN bkt b USING (vec_id)
-        WHERE e.vec_id % 50 = 0
-    ), probes AS (
-        SELECT q_id, qv,
-               unnest([bucket, xor(bucket, 1), xor(bucket, 2),
-                       xor(bucket, 4), xor(bucket, 8)]) AS bucket
-        FROM qv
-    ), pairs AS (
-        SELECT p.q_id, c.c_id, c.bucket,
-               {_COS_SQL.format(a="p.qv", b="c.cv")} AS cos
-        FROM probes p JOIN c USING (bucket)
-        WHERE c.c_id <> p.q_id
-    )
-    SELECT q_id, c_id, bucket, cos, CAST(rnk AS BIGINT) AS rank FROM (
-        SELECT q_id, c_id, bucket, cos,
-               row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-        FROM pairs
-    ) WHERE rnk <= 5
-    """,
+        -- the dequantized vectors; a nested WITH keeps the quantizer's
+        -- ``u`` apart from the LSH chain's
+        WITH {_int8_ctes("raw", dequantize=True)}
+        SELECT id AS vec_id, v FROM deq
+    ), {_LSH_BUCKET_CTES.strip()}, {_IVF_PAIRS_CTES}"""
+    + _IVF_TOP5_SQL,
 )
 def embed_ann_ivf_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantized ANN end-to-end: the corpus lives as int8 codes (4× smaller
@@ -4111,30 +3737,9 @@ def text_topk_bigrams_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_triangle_census",
     oracle=f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles
-        FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), postings AS (
-        SELECT id, len(shingles) AS set_size, unnest(shingles) AS shingle
-        FROM sets WHERE len(shingles) > 0
-    ), capped AS (
-        SELECT id, set_size, shingle FROM (
-            SELECT id, set_size, shingle,
-                   count(*) OVER (PARTITION BY shingle) AS df
-            FROM postings
-        )
-        WHERE df <= greatest(CAST(ceil(0.01 * (SELECT count(*) FROM documents)) AS BIGINT), 1)
-    ), pair_counts AS (
-        SELECT a.id AS id_a, b.id AS id_b,
-               a.set_size AS size_a, b.set_size AS size_b,
-               count(*) AS n_common
-        FROM capped a JOIN capped b USING (shingle)
-        WHERE a.id < b.id
-        GROUP BY 1, 2, 3, 4
+    WITH {_shingle_ctes(cap=0.01)}, pair_counts AS ({_pair_counts("capped")}
     ), edges AS (
-        SELECT id_a, id_b FROM pair_counts
-        WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.05
+        SELECT id_a, id_b FROM pair_counts WHERE {_JACCARD_MIN_SQL.format(t=0.05)}
     ), verts AS (
         SELECT id, count(*) AS deg FROM (
             SELECT id_a AS id FROM edges UNION ALL SELECT id_b FROM edges
@@ -4458,20 +4063,15 @@ def dedup_suffix_longest_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_ngram_novelty",
     oracle=f"""
-    WITH sets AS (
-        SELECT doc_id AS id, {_SHINGLES_SQL} AS shingles FROM documents
-        WHERE len({_TOKS_SQL}) >= 3
-    ), posts AS (
-        SELECT id, unnest(shingles) AS shingle FROM sets WHERE len(shingles) > 0
-    ), firsts AS (
-        SELECT shingle, min(id) AS first_id FROM posts GROUP BY 1
+    WITH {_shingle_ctes()}, firsts AS (
+        SELECT shingle, min(id) AS first_id FROM postings GROUP BY 1
     )
     SELECT id AS doc_id,
            CAST(count(*) AS BIGINT) AS n_shingles,
            CAST(sum(CASE WHEN first_id = id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
            CAST((10000 * sum(CASE WHEN first_id = id THEN 1 ELSE 0 END))
                 // count(*) AS BIGINT) AS novelty_bp
-    FROM posts JOIN firsts USING (shingle)
+    FROM postings JOIN firsts USING (shingle)
     GROUP BY id
     """,
 )
@@ -4586,9 +4186,7 @@ def text_source_bigram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embed_rank_fusion",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), {_LSH_BUCKET_CTES.strip()}, exact_pairs AS (
+    WITH {_EMBED_LSH_CTES}, exact_pairs AS (
         SELECT q.vec_id AS q_id, c.vec_id AS c_id,
                {_COS_SQL.format(a="q.v", b="c.v")} AS cos
         FROM e q JOIN e c ON q.vec_id <> c.vec_id
@@ -4600,28 +4198,12 @@ def text_source_bigram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       ORDER BY cos DESC, c_id) AS rnk
             FROM exact_pairs
         ) WHERE rnk <= 5
-    ), c AS (
-        SELECT e.vec_id AS c_id, e.v AS cv, b.bucket
-        FROM e JOIN bkt b USING (vec_id)
-    ), qv AS (
-        SELECT e.vec_id AS q_id, e.v AS qv, b.bucket
-        FROM e JOIN bkt b USING (vec_id)
-        WHERE e.vec_id % 50 = 0
-    ), probes AS (
-        SELECT q_id, qv,
-               unnest([bucket, xor(bucket, 1), xor(bucket, 2),
-                       xor(bucket, 4), xor(bucket, 8)]) AS bucket
-        FROM qv
-    ), ipairs AS (
-        SELECT p.q_id, c.c_id, {_COS_SQL.format(a="p.qv", b="c.cv")} AS cos
-        FROM probes p JOIN c USING (bucket)
-        WHERE c.c_id <> p.q_id
-    ), icand AS (
+    ), {_IVF_PAIRS_CTES}, icand AS (
         SELECT q_id, c_id, rnk FROM (
             SELECT q_id, c_id,
                    row_number() OVER (PARTITION BY q_id
                                       ORDER BY cos DESC, c_id) AS rnk
-            FROM ipairs
+            FROM pairs
         ) WHERE rnk <= 5
     ), fused AS (
         SELECT coalesce(x.q_id, y.q_id) AS q_id, coalesce(x.c_id, y.c_id) AS c_id,
@@ -4949,18 +4531,10 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embed_ann_pq_adc",
-    oracle="""
-    WITH e AS (
-        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), u AS (
-        SELECT id, i, v[i] AS x FROM e, unnest(range(1, len(v)+1)) AS t(i)
-    ), stats AS (
-        SELECT i, min(x) AS mn, max(x) AS mx FROM u GROUP BY i
-    ), codes AS (
+    oracle=f"""
+    WITH {_EMBED_CTE}, {_int8_ctes("e")}, codes AS (
         SELECT id, i, CAST((i - 1) // 16 AS INT) AS m,
-               CAST(floor((x - mn) * 255.0
-                    / (CASE WHEN mx = mn THEN 1.0 ELSE mx - mn END) + 0.5)
-                    AS BIGINT) AS code
+               CAST({_INT8_CODE_SQL} AS BIGINT) AS code
         FROM u JOIN stats USING (i)
     ), seed_ids AS (
         SELECT id, CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS j
@@ -5029,34 +4603,16 @@ def embed_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_adc_topk(q, e, k=5, n_subspaces=4, n_codes=8, train_iters=2)
 
 
-_MRL_TOPK_SQL = """
-        SELECT q_id, c_id FROM (
-            SELECT q.id AS q_id, c.id AS c_id,
-                   row_number() OVER (
-                       PARTITION BY q.id
-                       ORDER BY round(list_dot_product(q.v, c.v)
-                                / (sqrt(list_dot_product(q.v, q.v))
-                                   * sqrt(list_dot_product(c.v, c.v))), 5) DESC,
-                                c.id
-                   ) AS rnk
-            FROM {src} q CROSS JOIN {src} c
-            WHERE q.id % 50 = 0 AND c.id <> q.id
-        ) WHERE rnk <= 5
-"""
-
-
 @register(
     "embed_matryoshka_agreement",
     oracle=f"""
-    WITH e AS (
-        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), e16 AS (
+    WITH {_EMBED_CTE}, e16 AS (
         SELECT id, list_slice(v, 1, 16) AS v FROM e
     ), e32 AS (
         SELECT id, list_slice(v, 1, 32) AS v FROM e
-    ), te AS ({_MRL_TOPK_SQL.format(src="e")}
-    ), t16 AS ({_MRL_TOPK_SQL.format(src="e16")}
-    ), t32 AS ({_MRL_TOPK_SQL.format(src="e32")}
+    ), te AS ({_COS_TOP5_SQL.format(src="e")}
+    ), t16 AS ({_COS_TOP5_SQL.format(src="e16")}
+    ), t32 AS ({_COS_TOP5_SQL.format(src="e32")}
     )
     SELECT te.q_id,
            CAST(sum(CASE WHEN t16.c_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)

@@ -17,8 +17,10 @@ importer: about 0.12 s of CPU per task, paid by every ``mr`` stage and
 every Arrow/pandas stage before user code runs. The daemon module reads
 those archives once. It takes the daemon-module route because
 ``spark.python.worker.module`` only accepts names starting with ``pyspark``
-(pyspark/daemon.py:34-40). Workers import it from the driver's working
-directory or PYTHONPATH, as they import the rest of this package.
+(pyspark/daemon.py:34-40). Workers import it, and the rest of this
+package, from the package's parent directory, which the builder adds to
+the workers' PYTHONPATH (``spark.executorEnv.PYTHONPATH``; Spark appends
+it to its own archives), so a driver started from any directory works.
 """
 
 from __future__ import annotations
@@ -26,6 +28,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding this package, put on the Python workers' path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -63,6 +69,7 @@ def session_builder(app_name: str) -> SparkSession.Builder:
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "map_reduce_group_spark.pyworker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -177,6 +177,24 @@ def test_job_executables_inherit_worker_environment(spark, tmp_path):
     assert got == [f"{worker_path}\t1"] * 3
 
 
+def test_job_executables_see_no_spark_worker_archives(spark, tmp_path):
+    """The reference's executables see only the user's environment: the
+    archives PySpark puts on its Python workers' PYTHONPATH (pyspark.zip,
+    py4j, the spark-core jar) are not passed on to mapper or reducer."""
+    from map_reduce_group_spark.mr.job import run_job
+
+    inp = tmp_path / "input"
+    inp.mkdir()
+    (inp / "f.txt").write_text("a\nb\n")
+    probe = f"{EXEC_DIR}/env_map.py PYTHONPATH"
+    got = run_job(spark, Job(str(inp), "<unused>", probe, probe, 2, 2)).collect()
+    utils = spark.sparkContext._jvm.org.apache.spark.api.python.PythonUtils
+    archives = utils.sparkPythonPath().split(os.pathsep)
+    assert len(got) == 2 and len(set(got)) == 1, got
+    seen = got[0].rsplit("\t", 1)[0].split(os.pathsep)
+    assert archives and not set(archives) & set(seen), seen
+
+
 def test_executable_sees_cwd(spark):
     """Executable-contract parity: executables inherit the hosting process's
     working directory (reference Popen without cwd=), so relative sidecar

@@ -4,6 +4,9 @@ daemon started with, and archives a job ships later still import."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import uuid
 import zipfile
 
@@ -97,3 +100,25 @@ def test_kept_importer_rereads_only_archives_not_kept(tmp_path, monkeypatch):
     monkeypatch.setattr(pyworker_daemon, "_KEPT", frozenset())
     importer.invalidate_caches()
     assert importer.find_spec("second") is not None
+
+
+def test_tasks_run_when_driver_starts_outside_repo(tmp_path):
+    """A driver script run from another directory, with the package on its
+    own sys.path only: the workers must still import the daemon module
+    (and the package), so Python tasks run."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from map_reduce_group_spark.session import get_session\n"
+        "spark = get_session('mrg-outside-cwd')\n"
+        "print(spark.sparkContext.parallelize(range(4), 2).map(lambda x: x * 2).sum())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "12"
