@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from map_reduce_group_spark.scope import scoped_conf
+
 TABLES: tuple[str, ...] = (
     "region",
     "nation",
@@ -48,51 +50,37 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
-        # reader rejects outright; read it as raw nanos (legacy conf) and
-        # floor-convert to microseconds — exactly what DuckDB's TIMESTAMP
-        # (µs) does, so oracle comparisons agree.
-        # The conf is consumed when the parquet relation's schema is
-        # resolved, so it is saved and restored around the read — a later
-        # TIMESTAMP(NANOS) read by OTHER code in the same (possibly
-        # externally-owned) session keeps its own semantics instead of
-        # silently coming back as bigint. The conf stays scoped around the
-        # schema-cached read too: the scan consults it when the relation is
-        # constructed, whether the schema is inferred or supplied.
-        from pyspark.sql import functions as F
-
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        prior = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
-        try:
-            key = _file_key(path)
-            cached = _SCHEMA_CACHE.get(key)
-            if cached is not None:
-                df = spark.read.schema(cached).parquet(path)
-            else:
-                df = spark.read.parquet(path)
-                _SCHEMA_CACHE[key] = df.schema
-        finally:
-            if prior is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prior)
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # µs parquet written without UTC adjustment (e.g. by DuckDB):
-            # under a UTC session the instant is identical; normalize so
-            # instant functions (unix_micros, window) apply uniformly
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    # events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized reader
+    # rejects outright; read it as raw nanos (legacy conf) and floor-convert
+    # to microseconds — exactly what DuckDB's TIMESTAMP (µs) does, so oracle
+    # comparisons agree. The conf is consumed when the parquet relation's
+    # schema is resolved, so it is scoped to the read — a later
+    # TIMESTAMP(NANOS) read by OTHER code in the same (possibly
+    # externally-owned) session keeps its own semantics instead of silently
+    # coming back as bigint. The conf stays scoped around the schema-cached
+    # read too: the scan consults it when the relation is constructed,
+    # whether the schema is inferred or supplied.
+    nanos = {"spark.sql.legacy.parquet.nanosAsLong": "true"} if name == "events" else {}
+    with scoped_conf(spark, nanos):
+        key = _file_key(path)
+        cached = _SCHEMA_CACHE.get(key)
+        if cached is not None:
+            df = spark.read.schema(cached).parquet(path)
+        else:
+            df = spark.read.parquet(path)
+            _SCHEMA_CACHE[key] = df.schema
+    if name != "events":
         return df
-    key = _file_key(path)
-    cached = _SCHEMA_CACHE.get(key)
-    if cached is not None:
-        return spark.read.schema(cached).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMA_CACHE[key] = df.schema
+    from pyspark.sql import functions as F
+
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":
+        # µs parquet written without UTC adjustment (e.g. by DuckDB):
+        # under a UTC session the instant is identical; normalize so
+        # instant functions (unix_micros, window) apply uniformly
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

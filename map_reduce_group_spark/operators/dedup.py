@@ -32,6 +32,7 @@ from map_reduce_group_spark.operators.text import (
     spread_small_scan,
     tokens,
 )
+from map_reduce_group_spark.scope import scoped_conf
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1079,7 +1080,7 @@ def incremental_minhash_lsh(
     ``est_threshold``.
 
     ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` around
-    this call (set → act → restore, the run_to_memory convention): an
+    this call (``scope.scoped_conf``, as in run_to_memory): an
     increment is typically orders of magnitude smaller than the corpus,
     and sizing its shuffles to BATCH volume instead of the session's
     corpus-sized width cuts per-micro-batch task overhead (VERDICT r5 #5;
@@ -1102,8 +1103,6 @@ def incremental_minhash_lsh(
     rows_per_band = num_hashes // bands
     if num_hashes % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
-    saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    saved_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     n_batch: int | None = None
     if shuffle_partitions == "auto":
         n_batch = batch.count()
@@ -1111,141 +1110,143 @@ def incremental_minhash_lsh(
             max(8, -(-n_batch // 8192)),
             4 * spark.sparkContext.defaultParallelism,
         )
+    confs = {}
     if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # with shuffles explicitly sized to increment volume, AQE has
         # nothing left to decide here — but it still materializes a query
         # stage (a driver job boundary) per exchange, and an increment's
         # wall is job-floor-bound (profiled: 26 jobs / ~0.5 s of parallel
-        # compute at sf0.1). Scoped set→act→restore like the partition knob;
-        # results are partitioning-invariant either way.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sigs = minhash_signatures(batch, id_col, text_col, n, num_hashes, portable=True)
-    banded = sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "|",
-                            *[
-                                col("sig")[b * rows_per_band + r]
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(col("bb.band").alias("band"), col("bb.bucket").alias("bucket"), "id", "sig")
-    # banded feeds BOTH the decisions and the state write — persist so the
-    # tokenize→explode→window→32-min signature chain (the expensive stage)
-    # runs once per increment, not twice (VERDICT r5 #5)
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+        # compute at sf0.1). Scoped like the partition knob; results are
+        # partitioning-invariant either way.
+        confs = {
+            "spark.sql.shuffle.partitions": shuffle_partitions,
+            "spark.sql.adaptive.enabled": "false",
+        }
+    with scoped_conf(spark, confs):
+        sigs = minhash_signatures(batch, id_col, text_col, n, num_hashes, portable=True)
+        banded = sigs.select(
+            "id",
+            "sig",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("band"),
+                            F.concat_ws(
+                                "|",
+                                *[
+                                    col("sig")[b * rows_per_band + r]
+                                    for r in range(rows_per_band)
+                                ],
+                            ).alias("bucket"),
+                        )
+                        for b in range(bands)
+                    ]
+                )
+            ).alias("bb"),
+        ).select(col("bb.band").alias("band"), col("bb.bucket").alias("bucket"), "id", "sig")
+        # banded feeds BOTH the decisions and the state write — persist so the
+        # tokenize→explode→window→32-min signature chain (the expensive stage)
+        # runs once per increment, not twice (VERDICT r5 #5)
+        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
 
-    try:
-        table = os.path.join(state_path, "bands")
-        has_history = os.path.exists(table)
-        left = banded.select("band", "bucket", "id", "sig")
-        right = banded.select(
-            "band", "bucket", col("id").alias("match_id"), col("sig").alias("msig")
-        )
-        cands = (
-            left.join(right, ["band", "bucket"])
-            .filter(col("id") != col("match_id"))
-            .select("id", "sig", "match_id", "msig")
-        )
-        if has_history:
-            history = spark.read.parquet(table).select(
+        try:
+            table = os.path.join(state_path, "bands")
+            has_history = os.path.exists(table)
+            left = banded.select("band", "bucket", "id", "sig")
+            right = banded.select(
                 "band", "bucket", col("id").alias("match_id"), col("sig").alias("msig")
             )
-            cand_hist = (
-                banded.join(history, ["band", "bucket"])
-                # a replayed batch finds its own signatures in state — a doc
-                # is never its own near-dup, and excluding it keeps replays
-                # idempotent
+            cands = (
+                left.join(right, ["band", "bucket"])
                 .filter(col("id") != col("match_id"))
                 .select("id", "sig", "match_id", "msig")
             )
-            cands = cand_hist.unionByName(cands)
-        # else: the first increment has no buckets to probe — the history
-        # join and its signature-agreement estimate are skipped outright
-        # (value-identical: the join against an empty state is empty)
+            if has_history:
+                history = spark.read.parquet(table).select(
+                    "band", "bucket", col("id").alias("match_id"), col("sig").alias("msig")
+                )
+                cand_hist = (
+                    banded.join(history, ["band", "bucket"])
+                    # a replayed batch finds its own signatures in state — a doc
+                    # is never its own near-dup, and excluding it keeps replays
+                    # idempotent
+                    .filter(col("id") != col("match_id"))
+                    .select("id", "sig", "match_id", "msig")
+                )
+                cands = cand_hist.unionByName(cands)
+            # else: the first increment has no buckets to probe — the history
+            # join and its signature-agreement estimate are skipped outright
+            # (value-identical: the join against an empty state is empty)
 
-        # estimate BEFORE the pair dedup: band-duplicate candidates carry the
-        # same signatures, so n_agree is identical per (id, match_id) and the
-        # dedup shuffle moves 3 longs per row instead of two 32-long arrays
-        n_agree = sum(
-            F.when(col("sig")[i] == col("msig")[i], 1).otherwise(0)
-            for i in range(num_hashes)
-        )
-        decisions = (
-            cands.withColumn("n_agree", n_agree.cast("long"))
-            .withColumn("est_jaccard", col("n_agree") / float(num_hashes))
-            .filter(col("est_jaccard") >= est_threshold)
-            .select("id", "match_id", "n_agree", "est_jaccard")
-            .dropDuplicates(["id", "match_id"])
-        )
-        # decisions dir keyed by the CALLER'S batch tag when given: a
-        # redelivered micro-batch (foreachBatch restart after a
-        # pre-checkpoint crash) then OVERWRITES its own dir instead of
-        # appending a duplicate decisions_N — without a tag, a positional
-        # counter serves in-process sequential ingest
-        if batch_tag is None:
-            batch_tag = (
-                len([d for d in os.listdir(state_path) if d.startswith("decisions_")])
-                if os.path.exists(state_path)
-                else 0
+            # estimate BEFORE the pair dedup: band-duplicate candidates carry the
+            # same signatures, so n_agree is identical per (id, match_id) and the
+            # dedup shuffle moves 3 longs per row instead of two 32-long arrays
+            n_agree = sum(
+                F.when(col("sig")[i] == col("msig")[i], 1).otherwise(0)
+                for i in range(num_hashes)
             )
-        out_dir = os.path.join(state_path, f"decisions_{batch_tag}")
-        # size the decisions write to DECISION volume, not to the shuffle
-        # width: an increment's decisions are a few dozen bytes per row, so
-        # shuffle_partitions-many writer tasks produce that many tiny files
-        # and pay per-file create/commit latency each batch (guide §6 —
-        # measured on this host: 1.9 s for a 32-file tiny write vs 0.27 s
-        # for 4). ~1M rows per output file, growing with the increment.
-        if n_batch is not None or isinstance(shuffle_partitions, int):
-            est_rows = (
-                n_batch
-                if n_batch is not None
-                else int(shuffle_partitions) * 8192
+            decisions = (
+                cands.withColumn("n_agree", n_agree.cast("long"))
+                .withColumn("est_jaccard", col("n_agree") / float(num_hashes))
+                .filter(col("est_jaccard") >= est_threshold)
+                .select("id", "match_id", "n_agree", "est_jaccard")
+                .dropDuplicates(["id", "match_id"])
             )
-            decisions = decisions.coalesce(max(1, -(-est_rows // 1_000_000)))
-        dec_schema = decisions.schema
-        decisions.write.mode("overwrite").parquet(out_dir)
-        # read-back with the schema we just wrote: the decisions frame is
-        # decoupled from the live plan (the contract) without paying a
-        # footer-inference driver job per increment (guide §1/§6 — the
-        # per-job floor dominates micro-batch walls)
-        decided = spark.read.schema(dec_schema).parquet(out_dir)
+            # decisions dir keyed by the CALLER'S batch tag when given: a
+            # redelivered micro-batch (foreachBatch restart after a
+            # pre-checkpoint crash) then OVERWRITES its own dir instead of
+            # appending a duplicate decisions_N — without a tag, a positional
+            # counter serves in-process sequential ingest
+            if batch_tag is None:
+                batch_tag = (
+                    len([d for d in os.listdir(state_path) if d.startswith("decisions_")])
+                    if os.path.exists(state_path)
+                    else 0
+                )
+            out_dir = os.path.join(state_path, f"decisions_{batch_tag}")
+            # size the decisions write to DECISION volume, not to the shuffle
+            # width: an increment's decisions are a few dozen bytes per row, so
+            # shuffle_partitions-many writer tasks produce that many tiny files
+            # and pay per-file create/commit latency each batch (guide §6 —
+            # measured on this host: 1.9 s for a 32-file tiny write vs 0.27 s
+            # for 4). ~1M rows per output file, growing with the increment.
+            if n_batch is not None or isinstance(shuffle_partitions, int):
+                est_rows = (
+                    n_batch
+                    if n_batch is not None
+                    else int(shuffle_partitions) * 8192
+                )
+                decisions = decisions.coalesce(max(1, -(-est_rows // 1_000_000)))
+            dec_schema = decisions.schema
+            decisions.write.mode("overwrite").parquet(out_dir)
+            # read-back with the schema we just wrote: the decisions frame is
+            # decoupled from the live plan (the contract) without paying a
+            # footer-inference driver job per increment (guide §1/§6 — the
+            # per-job floor dominates micro-batch walls)
+            decided = spark.read.schema(dec_schema).parquet(out_dir)
 
-        if has_history:
-            # every doc emits every band (the explode is over range(bands)),
-            # so a non-empty batch touches exactly the bands partitions —
-            # pass them instead of paying a distinct-collect job per
-            # increment. Only provable when the batch size is known here.
-            known_parts = (
-                list(range(bands)) if n_batch is not None and n_batch > 0 else None
-            )
-            upsert_by_key(
-                banded, table, ["band", "bucket", "id"], "band", parts=known_parts
-            )
-        else:
-            # cluster sized to the band count (the table's partition-value
-            # count) — one file per band dir, not shuffle.partitions tasks
-            # each paying per-file create/commit latency (guide §6)
-            banded.repartition(bands, col("band")).write.partitionBy(
-                "band"
-            ).parquet(table)
-        return decided
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
-        banded.unpersist()
+            if has_history:
+                # every doc emits every band (the explode is over range(bands)),
+                # so a non-empty batch touches exactly the bands partitions —
+                # pass them instead of paying a distinct-collect job per
+                # increment. Only provable when the batch size is known here.
+                known_parts = (
+                    list(range(bands)) if n_batch is not None and n_batch > 0 else None
+                )
+                upsert_by_key(
+                    banded, table, ["band", "bucket", "id"], "band", parts=known_parts
+                )
+            else:
+                # cluster sized to the band count (the table's partition-value
+                # count) — one file per band dir, not shuffle.partitions tasks
+                # each paying per-file create/commit latency (guide §6)
+                banded.repartition(bands, col("band")).write.partitionBy(
+                    "band"
+                ).parquet(table)
+            return decided
+        finally:
+            banded.unpersist()
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, portable: bool = False) -> DataFrame:

@@ -33,6 +33,7 @@ from map_reduce_group_spark.operators.text import (
     tokens,
 )
 from map_reduce_group_spark.plans.registry import register
+from map_reduce_group_spark.scope import fresh_dir
 
 _TOKS_SQL = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
 
@@ -558,17 +559,15 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     odd doc precedes an even duplicate numerically, so a hash-match proves
     the two-phase state behavior, not just batch dedup. Replay idempotence
     is pinned separately in the property suite."""
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
-    state = tempfile.mkdtemp(prefix="mrg_incdedup_")
+    state = fresh_dir("dedup_incremental_exact")
     a = dedup.incremental_exact_dedup(
         d.filter(col("doc_id") % 2 == 0), state, "doc_id", "text"
     )
     b = dedup.incremental_exact_dedup(
         d.filter(col("doc_id") % 2 == 1), state, "doc_id", "text"
     )
-    return a.unionByName(b)
+    return a.unionByName(b).localCheckpoint(eager=True)  # the next call deletes state
 
 
 @register(
@@ -615,10 +614,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the portable affine signatures; a hash-match proves the state
     probe finds exactly the pairs a batch-over-union run would. Replay
     idempotence is pinned in the property suite."""
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
-    state = tempfile.mkdtemp(prefix="mrg_incmh_")
+    state = fresh_dir("dedup_incremental_minhash")
     # shuffles sized to increment volume, not the session's corpus width
     # (VERDICT r5 #5 — the stream_purchase_attribution state-sizing fix)
     a = dedup.incremental_minhash_lsh(
@@ -629,7 +626,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(col("doc_id") % 2 == 1), state, "doc_id", "text",
         shuffle_partitions="auto",
     )
-    return a.unionByName(b)
+    return a.unionByName(b).localCheckpoint(eager=True)  # the next call deletes state
 
 
 # Prefix-filtered exact-Jaccard pair CTE chain (threshold 0.5) — the

@@ -9,54 +9,84 @@ exactly (same oracle strings as their batch twins in plans/events.py).
 
 from __future__ import annotations
 
-import atexit
+import glob
 import itertools
 import os
 import shutil
-import tempfile
+from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from map_reduce_group_spark import scope
+from map_reduce_group_spark.catalog import load_table
 from map_reduce_group_spark.plans.registry import register
 from map_reduce_group_spark.streaming import events_stream as es
 
 _COUNTER = itertools.count()
-_STREAM_DIRS: dict[tuple[str, int], str] = {}
-
-
-@atexit.register
-def _cleanup_temp_dirs() -> None:
-    """Remove the per-process source/state temp dirs at interpreter exit
-    (ADVICE r5: they were process-lifetime leaks for library use)."""
-    dirs = (
-        list(_STREAM_DIRS.values())
-        + list(_INCMH_SRC.values())
-        + _INCMH_LAST
-        + list(_LATE_SRC.values())
-        + _LATE_LAST
-        + list(_TSPLIT_SRC.values())
-    )
-    for d in dirs:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _events_stream_dir(sf_dir: str, copies: int = 1) -> str:
     """File stream sources need a directory; expose the single events
-    parquet file via a symlinked temp dir (testdata is read-only).
+    parquet file via a symlinked workspace dir (testdata is read-only).
     ``copies=2`` links the same file twice — an at-least-once redelivery
-    fixture for the streaming dedup check. Cached per (sf_dir, copies) so
-    repeated builder invocations don't leak dirs."""
-    key = (sf_dir, copies)
-    if key not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="mrg_stream_src_")
+    fixture for the streaming dedup check."""
+
+    def link(d: str) -> None:
         for i in range(copies):
             os.symlink(
                 os.path.join(sf_dir, "events.parquet"),
                 os.path.join(d, f"events_{i}.parquet"),
             )
-        _STREAM_DIRS[key] = d
-    return _STREAM_DIRS[key]
+
+    return scope.source_dir(f"events_x{copies}", sf_dir, link)
+
+
+def _write_mtime_ordered(src: str, stem: str, parts: list[DataFrame]) -> None:
+    """Write each of ``parts`` into ``src`` as one single-file parquet,
+    ``{stem}_{i}.parquet``, with mtimes ascending in ``i``: the file source
+    takes the oldest file first, so under ``maxFilesPerTrigger=1`` a stream
+    replays the parts as micro-batches in list order."""
+
+    # the writes are independent single-task jobs; submit them from a
+    # thread pool so each back-fills executors the previous write's tail
+    # leaves idle (guide §2.6 — actions are only sequential because driver
+    # code calls them sequentially). File CONTENT and the mtime ordering
+    # are set per index, so concurrency cannot reorder anything the stream
+    # observes.
+    def write(i: int) -> None:
+        # "_"-prefixed, so a file source never lists the staging dir
+        part_dir = os.path.join(src, f"_{stem}_{i}")
+        parts[i].coalesce(1).write.parquet(part_dir)
+        dst = os.path.join(src, f"{stem}_{i}.parquet")
+        os.replace(glob.glob(os.path.join(part_dir, "part-*.parquet"))[0], dst)
+        os.utime(dst, (1_600_000_000 + i * 1000, 1_600_000_000 + i * 1000))
+        shutil.rmtree(part_dir)
+
+    with ThreadPoolExecutor(max_workers=len(parts)) as pool:
+        list(pool.map(write, range(len(parts))))
+
+
+def _replay_into_fresh_state(spark: SparkSession, query: str, src: str, schema, ingest) -> str:
+    """Replay ``src`` one file per micro-batch (availableNow) through the
+    ``foreachBatch`` sink ``ingest(batch_df, batch_id, state)``, with state
+    and checkpoint dirs that start FRESH on every call of ``query`` (the
+    replay tests rely on deterministic fresh-state runs). Returns the state
+    dir; the next call deletes it (scope.fresh_dir), so the caller must
+    materialize what it reads from it before returning."""
+    work = scope.fresh_dir(query)
+    state = os.path.join(work, "state")
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .writeStream.foreachBatch(lambda df, batch_id: ingest(df, batch_id, state))
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return state
 
 
 @register(
@@ -184,8 +214,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: each event enriched with the customer dimension
     (re-read per micro-batch; broadcast-able small side). Append mode — no
     state beyond the join itself."""
-    from map_reduce_group_spark.catalog import load_table
-
     stream = es.read_events_stream(spark, _events_stream_dir(sf_dir))
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_name", "c_mktsegment"
@@ -266,16 +294,8 @@ def stream_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # parity split (stream_late_quarantine), batches must ASCEND in event time so
 # no input row falls below the advancing watermark (a stateful op drops such
 # rows as late, which would lose inner matches the batch oracle has)
-_TSPLIT_SRC: dict[str, str] = {}
-
-
 def _events_timesplit_dir(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
-    import glob
-    import shutil
-
-    from map_reduce_group_spark.catalog import load_table
-
-    if sf_dir not in _TSPLIT_SRC:
+    def split(src: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type"
         )
@@ -289,35 +309,17 @@ def _events_timesplit_dir(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
             ).alias("b")
         ).collect()[0]["b"]
         edges = [None] + [int(b) for b in bounds] + [None]
-        src = tempfile.mkdtemp(prefix="mrg_tsplit_src_")
-
-        # the n split writes are independent single-task jobs; submit them
-        # from a thread pool so each back-fills executors the previous
-        # write's tail leaves idle (guide §2.6 — actions are only
-        # sequential because driver code calls them sequentially). File
-        # CONTENT and the mtime ordering are set per index, so concurrency
-        # cannot reorder anything the stream observes.
-        def write_split(i: int) -> None:
+        parts = []
+        for i in range(n):
             part = ev
             if edges[i] is not None:
                 part = part.filter(F.unix_micros("ts") > edges[i])
             if edges[i + 1] is not None:
                 part = part.filter(F.unix_micros("ts") <= edges[i + 1])
-            part_dir = tempfile.mkdtemp(prefix="mrg_tsplit_part_")
-            part.coalesce(1).write.mode("overwrite").parquet(part_dir)
-            dst = os.path.join(src, f"events_{i}.parquet")
-            shutil.copyfile(
-                glob.glob(os.path.join(part_dir, "part-*.parquet"))[0], dst
-            )
-            os.utime(dst, (1_600_000_000 + i * 1000, 1_600_000_000 + i * 1000))
-            shutil.rmtree(part_dir)
+            parts.append(part)
+        _write_mtime_ordered(src, "events", parts)
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=n) as pool:
-            list(pool.map(write_split, range(n)))
-        _TSPLIT_SRC[sf_dir] = src
-    return _TSPLIT_SRC[sf_dir]
+    return scope.source_dir(f"events_timesplit{n}", sf_dir, split)
 
 
 @register(
@@ -369,8 +371,6 @@ def stream_purchase_attribution_outer(spark: SparkSession, sf_dir: str) -> DataF
     slack horizon (watermarks bound retention on each side); null
     emission is driven by state eviction, so unbounded streams hold
     bounded state and every purchase still emits exactly once."""
-    from map_reduce_group_spark.catalog import load_table
-
     src = _events_timesplit_dir(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     schema = ev.select("event_id", "ts", "user_id", "event_type").schema
@@ -405,14 +405,6 @@ def stream_purchase_attribution_outer(spark: SparkSession, sf_dir: str) -> DataF
 # (alphabetical), so the batch spec is always registered first.
 from map_reduce_group_spark.plans.registry import REGISTRY as _REG  # noqa: E402
 
-# source dir cache (the even/odd halves are a pure function of sf_dir) and
-# last-invocation state/ckpt dirs — state must be FRESH per invocation (the
-# replay test relies on deterministic fresh-state runs), but the previous
-# invocation's dirs are deleted so repeated builder calls don't leak a
-# documents-sized copy per run (the _events_stream_dir convention)
-_INCMH_SRC: dict[str, str] = {}
-_INCMH_LAST: list[str] = []
-
 
 @register(
     "stream_incremental_minhash",
@@ -431,39 +423,18 @@ def stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oldest-first under ``maxFilesPerTrigger=1``, so the stream replays the
     batch twin's phases 1:1 and the SAME DuckDB oracle hash-checks a REAL
     streaming execution (the streamplans module convention)."""
-    import glob
-    import shutil
-
-    from map_reduce_group_spark.catalog import load_table
     from map_reduce_group_spark.operators import dedup
 
     d = load_table(spark, sf_dir, "documents")
-    if sf_dir not in _INCMH_SRC:
-        src = tempfile.mkdtemp(prefix="mrg_incmh_src_")
-        for i, parity in enumerate([0, 1]):
-            part_dir = tempfile.mkdtemp(prefix="mrg_incmh_half_")
-            d.filter(F.col("doc_id") % 2 == parity).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(part_dir)
-            dst = os.path.join(src, f"docs_{i}.parquet")
-            shutil.copyfile(glob.glob(os.path.join(part_dir, "part-*.parquet"))[0], dst)
-            os.utime(dst, (1_600_000_000 + i * 1000, 1_600_000_000 + i * 1000))
-            shutil.rmtree(part_dir)
-        _INCMH_SRC[sf_dir] = src
-    src = _INCMH_SRC[sf_dir]
-
-    while _INCMH_LAST:
-        shutil.rmtree(_INCMH_LAST.pop(), ignore_errors=True)
-    state = tempfile.mkdtemp(prefix="mrg_incmh_state_")
-    ckpt = tempfile.mkdtemp(prefix="mrg_incmh_ckpt_")
-    _INCMH_LAST.extend([state, ckpt])
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    src = scope.source_dir(
+        "docs_parity2",
+        sf_dir,
+        lambda src: _write_mtime_ordered(
+            src, "docs", [d.filter(F.col("doc_id") % 2 == p) for p in (0, 1)]
+        ),
     )
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+    def ingest(batch_df: DataFrame, batch_id: int, state: str) -> None:
         # decisions keyed by Spark's batch_id: a redelivered micro-batch
         # (restart after a pre-checkpoint-commit crash) overwrites its own
         # decisions dir instead of appending a duplicate — the same
@@ -473,15 +444,11 @@ def stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions="auto",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    state = _replay_into_fresh_state(
+        spark, "stream_incremental_minhash", src, d.schema, ingest
     )
-    q.awaitTermination()
     # localCheckpoint EAGERLY: the next invocation deletes this state dir
-    # (_INCMH_LAST), and a lazy read over it would PATH_NOT_FOUND for any
+    # (scope.fresh_dir), and a lazy read over it would PATH_NOT_FOUND for any
     # caller that re-invokes the builder before collecting the earlier
     # result (ADVICE r5). The decisions set is small (pair decisions, not
     # documents), so materializing it is cheap.
@@ -571,10 +538,6 @@ def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LATE_SRC: dict[str, str] = {}
-_LATE_LAST: list[str] = []
-
-
 @register(
     "stream_late_quarantine",
     oracle="""
@@ -610,50 +573,25 @@ def stream_late_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (late = 0 everywhere), exactly like Spark's first micro-batch. The
     DuckDB oracle replays the batch assignment, the running max, and
     every lateness comparison in epoch microseconds."""
-    import glob
-    import shutil
-
-    from map_reduce_group_spark.catalog import load_table
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    if sf_dir not in _LATE_SRC:
-        src = tempfile.mkdtemp(prefix="mrg_late_src_")
-        for i in range(4):
-            part_dir = tempfile.mkdtemp(prefix="mrg_late_part_")
-            ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(part_dir)
-            dst = os.path.join(src, f"events_{i}.parquet")
-            shutil.copyfile(glob.glob(os.path.join(part_dir, "part-*.parquet"))[0], dst)
-            os.utime(dst, (1_600_000_000 + i * 1000, 1_600_000_000 + i * 1000))
-            shutil.rmtree(part_dir)
-        _LATE_SRC[sf_dir] = src
-    src = _LATE_SRC[sf_dir]
-
-    while _LATE_LAST:
-        shutil.rmtree(_LATE_LAST.pop(), ignore_errors=True)
-    state = tempfile.mkdtemp(prefix="mrg_late_state_")
-    ckpt = tempfile.mkdtemp(prefix="mrg_late_ckpt_")
-    _LATE_LAST.extend([state, ckpt])
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    src = scope.source_dir(
+        "events_parity4",
+        sf_dir,
+        lambda src: _write_mtime_ordered(
+            src, "events", [ev.filter(F.col("event_id") % 4 == i) for i in range(4)]
+        ),
     )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        es.quarantine_late(batch_df, state, batch_id, delay_us=1_800_000_000)
-
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    state = _replay_into_fresh_state(
+        spark,
+        "stream_late_quarantine",
+        src,
+        ev.schema,
+        lambda batch_df, batch_id, state: es.quarantine_late(
+            batch_df, state, batch_id, delay_us=1_800_000_000
+        ),
     )
-    q.awaitTermination()
     # materialize before returning: the next invocation deletes this state
-    # dir (the stream_incremental_minhash lifecycle convention, ADVICE r5).
+    # dir (scope.fresh_dir; the stream_incremental_minhash lifecycle, ADVICE r5).
     # Project away max_us — it is watermark STATE riding the decisions file
     # (one batch scan + one write per trigger), not part of the query's
     # declared output.

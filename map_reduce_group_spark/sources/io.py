@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from map_reduce_group_spark.scope import scoped_conf
+
 
 def read_text_dir(spark: SparkSession, path: str) -> DataFrame:
     """Reference-parity text scan: one string column ``value``/line."""
@@ -72,18 +74,11 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) ->
     ``df``, leaving sibling partitions untouched — the idempotent daily-load
     primitive (re-running a day's job rewrites that day's directory, never
     truncating the table the way static overwrite mode does). The conf is
-    scoped to this write and restored after."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
+    scoped to this write (scope.scoped_conf)."""
+    with scoped_conf(
+        df.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def write_zordered(

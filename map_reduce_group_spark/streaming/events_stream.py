@@ -27,6 +27,7 @@ from pyspark.sql.functions import col
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from map_reduce_group_spark.functions.numeric import dsum
+from map_reduce_group_spark.scope import scoped_conf
 
 def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
@@ -179,12 +180,12 @@ def run_to_memory(
     wall; 8 partitions = 2.6 s (5.3x), identical output. Size it to state
     VOLUME (tens of MB per store before splitting further), not to core
     count — at 100 TB state you raise it; at bench scale the machinery
-    dominates. Scoped set/restore so batch queries keep the session value."""
+    dominates. Scoped (scope.scoped_conf) so batch queries keep the session value."""
     spark = stream_df.sparkSession
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    confs = {}
     if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+        confs["spark.sql.shuffle.partitions"] = state_partitions
+    with scoped_conf(spark, confs):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -193,9 +194,6 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
     # the resolved plan keeps the sink's rows without the view
     result = spark.table(name)
     spark.catalog.dropTempView(name)

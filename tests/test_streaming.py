@@ -315,9 +315,11 @@ def test_stream_incremental_minhash_equals_batch_and_replays(spark, sf_dir):
     deterministic micro-batches ARE the batch query's two ingest phases —
     and (b) be replay-idempotent: re-running the whole stream with a fresh
     checkpoint over the same source yields the SAME decisions (a doc never
-    matches itself on redelivery; state upserts recreate identical rows)."""
+    matches itself on redelivery; state upserts recreate identical rows).
+    The workspace keeps only the latest run's state/ckpt dirs."""
     batch = REGISTRY["dedup_incremental_minhash"].builder(spark, sf_dir)
     stream1 = REGISTRY["stream_incremental_minhash"].builder(spark, sf_dir)
+    first_run = _only_run_dir("stream_incremental_minhash")
     key = lambda df: {
         (r["id"], r["match_id"]): r["n_agree"] for r in df.collect()
     }
@@ -327,21 +329,38 @@ def test_stream_incremental_minhash_equals_batch_and_replays(spark, sf_dir):
     # replay: a second full builder run (fresh state + checkpoint dirs) is
     # deterministic; and the decision set equals the first run's
     stream2 = REGISTRY["stream_incremental_minhash"].builder(spark, sf_dir)
+    assert _only_run_dir("stream_incremental_minhash") != first_run
     assert key(stream2) == k_stream
+
+
+def _only_run_dir(query: str) -> str:
+    """The one per-invocation dir ``query`` holds in the workspace, which
+    must contain its state and checkpoint dirs."""
+    import os
+
+    from map_reduce_group_spark import scope
+
+    runs = os.path.join(scope.workspace(), query)
+    (run,) = os.listdir(runs)
+    assert sorted(os.listdir(os.path.join(runs, run))) == ["ckpt", "state"]
+    return run
 
 
 def test_stream_late_quarantine_reinvocation_and_batch0(spark, sf_dir):
     """Back-to-back builder invocations with deferred collection must both
     return correct frames (the stream_incremental_minhash lifecycle lesson,
     ADVICE r5/r6: the second invocation deletes the first's state dirs, so
-    the returned frame must be materialized, not lazily bound to them).
+    the returned frame must be materialized, not lazily bound to them; the
+    workspace then holds only the second invocation's dirs).
     Also pins the watermark boot semantics: batch 0 has no prior max event
     time, so nothing in it can be late."""
     from map_reduce_group_spark.plans.registry import REGISTRY
 
     b = REGISTRY["stream_late_quarantine"].builder
     df1 = b(spark, sf_dir)
+    first_run = _only_run_dir("stream_late_quarantine")
     df2 = b(spark, sf_dir)  # deletes df1's state dirs before df1 collects
+    assert _only_run_dir("stream_late_quarantine") != first_run
     r1 = sorted(map(tuple, df1.collect()))
     r2 = sorted(map(tuple, df2.collect()))
     assert r1 == r2 and len(r1) > 0
