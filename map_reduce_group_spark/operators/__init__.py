@@ -14,8 +14,11 @@ which it could unpersist. Long-lived sessions must therefore call
 ``spark.catalog.clearCache()`` (or ``unpersist()`` on the returned frame's
 cached dependencies) between logical jobs, exactly as ``bench.py`` does
 between queries. Plan-internal fanouts that need no caller-visible handle
-use eager ``localCheckpoint`` instead (ContextCleaner-released when the
-plan is garbage-collected — see operators/diagnostics.py).
+use eager ``localCheckpoint`` instead (see operators/diagnostics.py). Those
+blocks are NOT released by ``clearCache()``: building and collecting one
+such query three times, clearing the cache after each, left
+``getPersistentRDDs()`` at 1, 2, 3 — they stay until the session stops.
+Tracking and releasing them is ROADMAP item 2.
 """
 
 from map_reduce_group_spark.operators.asof import asof_join

@@ -10,14 +10,15 @@ Design for 100 TB:
   prefix filtering / df-cap on hot shingles (noted inline).
 - **MinHash+LSH**: fixed-size signatures (k hashes) → banding → bucket
   join; candidate verification by exact Jaccard over the shingle postings.
-- **SimHash**: 64-bit signature via per-bit weighted sums — one explode +
+- **SimHash**: 60-bit signature via per-bit weighted sums — one explode +
   one groupBy.
 
 Performance note (measured, sf0.1): everything here deliberately avoids
 Spark's higher-order array functions (transform/aggregate lambdas are
 *interpreted* per element — a nested-transform MinHash measured ~60 ms/doc).
 Shingles are built with posexplode + window ``lead`` and signatures with
-flat ``min(xxhash64(...))`` aggregates, all inside whole-stage codegen.
+flat ``min`` aggregates over one md5-derived hash per shingle, all inside
+whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -213,11 +214,10 @@ def _worth_collapsing(df: DataFrame, text_col: str) -> bool:
     return n > 0 and (n - d) / n >= COLLAPSE_MIN_CLONE_FRAC
 
 
-def _exact_jaccard_pairs(postings: DataFrame, threshold: float) -> DataFrame:
-    """(id_a, id_b, n_common, jaccard) for every posting-sharing pair at or
-    above ``threshold`` — the shared verification shape of the exact-Jaccard
-    family (threshold on the RAW quotient; the displayed jaccard is 1/10^6
-    integer fixed point — functions/numeric.py:fp_ratio, rule 1)."""
+def _pair_counts(postings: DataFrame) -> DataFrame:
+    """Undirected (id_a < id_b) pair overlap counts carrying BOTH set sizes:
+    the posting self-join on shingle, the expensive half of the exact-
+    Jaccard and containment operators, run once per pair."""
     a = postings.select(col("id").alias("id_a"), col("set_size").alias("size_a"), "shingle")
     b = postings.select(col("id").alias("id_b"), col("set_size").alias("size_b"), "shingle")
     return (
@@ -225,7 +225,15 @@ def _exact_jaccard_pairs(postings: DataFrame, threshold: float) -> DataFrame:
         .filter(col("id_a") < col("id_b"))
         .groupBy("id_a", "id_b", "size_a", "size_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
-        .withColumn(
+    )
+
+
+def _jaccard_from_counts(counts: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, n_common, jaccard) for every counted pair at or above
+    ``threshold`` (threshold on the RAW quotient; the displayed jaccard is
+    1/10^6 integer fixed point — functions/numeric.py:fp_ratio, rule 1)."""
+    return (
+        counts.withColumn(
             "jaccard_raw", col("n_common") / (col("size_a") + col("size_b") - col("n_common"))
         )
         .filter(col("jaccard_raw") >= threshold)
@@ -238,45 +246,38 @@ def _exact_jaccard_pairs(postings: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _collapsed_pair_structure(postings: DataFrame, threshold: float):
-    """Identical-set collapse shared by the exact-Jaccard family (same lemma
-    as jaccard_prefix_filter_pairs: byte-identical POST-CAP shingle sets
-    have identical overlap with everything, so exact-clone families verify
-    once through a representative — the g² clone-family blowup becomes g).
-    The collapse key includes set_size: under a df-cap two docs can share
-    the filtered set while differing in true set size, and set_size is the
-    Jaccard denominator.
+def _verify_candidates(cand: DataFrame, postings: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of (id_a, id_b) candidate pairs against their shingle
+    postings — the verifier of the prefix-filter and MinHash operators, so
+    their precision is exact. Cost O(candidates · set size), no driver
+    traffic."""
+    pa = postings.select(col("id").alias("id_a"), col("set_size").alias("size_a"), "shingle")
+    pb = postings.select(col("id").alias("id_b"), col("set_size").alias("size_b"), "shingle")
+    counts = (
+        cand.join(pa, "id_a")
+        .join(pb, ["id_b", "shingle"])
+        .groupBy("id_a", "id_b", "size_a", "size_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return _jaccard_from_counts(counts, threshold)
 
-    Returns (members, rep_pairs):
+
+def _identical_set_members(postings: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The identical-set collapse of the shingle-pair family: byte-identical
+    (post-cap) shingle sets have identical overlap with everything, so an
+    exact-clone family joins once through a representative — the g²
+    clone-family blowup becomes g.
+
+    Returns (members, rep_postings):
     - members: (set_fp, set_size, id, rep, n_kept) — one row per document,
       ``rep`` = min(id) of its identical-set group, ``n_kept`` = size of
-      the (post-cap) shingle set;
-    - rep_pairs: (id_a, id_b, n_common, jaccard) — qualifying pairs at the
-      REPRESENTATIVE level (cross-group only; within-group pairs are
-      implicit: n_common = n_kept, jaccard = n_kept/(2·set_size − n_kept)).
+      the post-cap set. The group key includes set_size because under a
+      df-cap two docs can share the filtered set while differing in TRUE
+      set size, and set_size is every overlap metric's denominator;
+    - rep_postings: the postings of the representatives only.
     """
     from pyspark import StorageLevel
 
-    # members is consumed by the rep-postings filter here AND by every
-    # caller's expansion joins (ma/mb/m1/m2 — up to 4 more subtrees);
-    # without a persist each consumer re-runs the collect_list set-
-    # fingerprint aggregation AND the postings head behind it (measured:
-    # the triangle-census plan held 132 copies of the documents scan,
-    # zero ReusedExchange — guide §2.4 "remove shuffles outright").
-    members = _identical_set_members(postings).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    rpost = postings.join(members.filter(col("id") == col("rep")).select("id"), "id")
-    return members, _exact_jaccard_pairs(rpost, threshold)
-
-
-def _identical_set_members(postings: DataFrame) -> DataFrame:
-    """(set_fp, set_size, id, rep, n_kept) — one row per document, ``rep`` =
-    min(id) of its byte-identical (post-cap) shingle-set group, ``n_kept``
-    = size of the post-cap set. The collapse key includes set_size because
-    under a df-cap two docs can share the filtered set while differing in
-    TRUE set size, and set_size is every overlap metric's denominator.
-    Shared by the Jaccard and containment collapse paths."""
     sets = postings.groupBy("id", "set_size").agg(
         F.md5(F.concat_ws("\x1f", F.array_sort(F.collect_list("shingle")))).alias(
             "set_fp"
@@ -284,8 +285,59 @@ def _identical_set_members(postings: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_kept"),
     )
     reps = sets.groupBy("set_fp", "set_size").agg(F.min("id").alias("rep"))
-    return sets.join(reps, ["set_fp", "set_size"]).select(
-        "set_fp", "set_size", "id", "rep", "n_kept"
+    # members feed the rep-postings filter here AND every caller's
+    # expansion joins (up to 4 more subtrees); without a persist each
+    # consumer re-runs the collect_list set-fingerprint aggregation AND the
+    # postings head behind it (measured: the triangle-census plan held 132
+    # copies of the documents scan, zero ReusedExchange — guide §2.4)
+    members = (
+        sets.join(reps, ["set_fp", "set_size"])
+        .select("set_fp", "set_size", "id", "rep", "n_kept")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    rpost = postings.join(members.filter(col("id") == col("rep")).select("id"), "id")
+    return members, rpost
+
+
+def _expand_rep_pairs(rep_pairs: DataFrame, members: DataFrame) -> DataFrame:
+    """Every member pair (id_a < id_b) of each representative pair, with
+    the pair's other columns: identical sets share each value."""
+    ma = members.select(col("rep").alias("id_a"), col("id").alias("m_a"))
+    mb = members.select(col("rep").alias("id_b"), col("id").alias("m_b"))
+    rest = [c for c in rep_pairs.columns if c not in ("id_a", "id_b")]
+    return (
+        rep_pairs.join(ma, "id_a")
+        .join(mb, "id_b")
+        .select(
+            F.least("m_a", "m_b").alias("id_a"),
+            F.greatest("m_a", "m_b").alias("id_b"),
+            *rest,
+        )
+    )
+
+
+def _within_pairs(members: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, n_common, jaccard) for the pairs inside each identical-
+    set group, which share the whole filtered set (n_kept shingles). Under
+    a cap their Jaccard n_kept/(2s−n_kept) can be < 1 and must still clear
+    the threshold, exactly as the all-pairs form computes; uncapped it is
+    fp_ratio(s, s) = 1.0 with n_common = set_size."""
+    m1 = members.select("set_fp", "set_size", col("id").alias("id_a"), "n_kept")
+    m2 = members.select("set_fp", "set_size", col("id").alias("id_b"))
+    return (
+        m1.join(m2, ["set_fp", "set_size"])
+        .filter(col("id_a") < col("id_b"))
+        .withColumn(
+            "jaccard_raw",
+            col("n_kept") / (col("set_size") * 2 - col("n_kept")),
+        )
+        .filter(col("jaccard_raw") >= threshold)
+        .select(
+            "id_a",
+            "id_b",
+            col("n_kept").alias("n_common"),
+            fp_ratio("n_kept", "set_size * 2 - n_kept").alias("jaccard"),
+        )
     )
 
 
@@ -294,14 +346,11 @@ def capped_postings(
     id_col: str,
     text_col: str,
     n: int = 3,
-    max_doc_freq: int | None = None,
     max_doc_frac: float | None = None,
 ) -> DataFrame:
     """Shingle postings with the optional df-cap applied — the shared input
     of the exact-Jaccard family. df is computed on the FULL postings (the
     contract counts every document) before any collapse downstream."""
-    if max_doc_freq is not None and max_doc_frac is not None:
-        raise ValueError("pass max_doc_freq or max_doc_frac, not both")
     postings = shingle_postings(df, id_col, text_col, n)
     if max_doc_frac is not None:
         n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -315,13 +364,6 @@ def capped_postings(
             )
             .drop("df", "n_docs")
         )
-    elif max_doc_freq is not None:
-        w_df = Window.partitionBy("shingle")
-        postings = (
-            postings.withColumn("df", F.count(F.lit(1)).over(w_df))
-            .filter(col("df") <= max_doc_freq)
-            .drop("df")
-        )
     return postings
 
 
@@ -331,7 +373,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.2,
-    max_doc_freq: int | None = None,
     max_doc_frac: float | None = None,
 ) -> DataFrame:
     """EXACT n-gram-Jaccard similar pairs via inverted-index self-join.
@@ -349,20 +390,20 @@ def ngram_jaccard_pairs(
     The threshold is applied to the RAW quotient (matches the oracle);
     the displayed value is 1/10^6 integer fixed point (fp_ratio, rule 1).
 
-    ``max_doc_freq`` / ``max_doc_frac`` are the 100 TB lever: drop
-    stop-shingles appearing in more than that many (resp. that fraction of)
-    documents BEFORE the self-join (a shingle in f docs contributes O(f²)
-    candidate rows). Set sizes keep counting dropped shingles, so the
-    measured overlap only shrinks: measured ≤ true Jaccard, and every
-    returned pair therefore meets the threshold on the TRUE metric too
-    (exact precision; recall loss limited to pairs whose overlap is mostly
-    boilerplate shingles). Prefer the fractional form — boilerplate volume
-    grows with the corpus while duplicate-family sizes (whose shingles have
-    df ≈ family size) don't, so a fraction stays recall-safe as data grows
-    where any absolute cap eventually cuts into real duplicate families.
-    The effective cap is ``greatest(ceil(frac · n_docs), 1)`` computed in
-    double on both engines (identical IEEE result, oracle-stable). Default
-    None = fully exact (oracle mode).
+    ``max_doc_frac`` is the 100 TB lever: drop stop-shingles appearing in
+    more than that fraction of documents BEFORE the self-join (a shingle in
+    f docs contributes O(f²) candidate rows). Set sizes keep counting
+    dropped shingles, so the measured overlap only shrinks: measured ≤ true
+    Jaccard, and every returned pair therefore meets the threshold on the
+    TRUE metric too (exact precision; recall loss limited to pairs whose
+    overlap is mostly boilerplate shingles). The cap is a fraction because
+    boilerplate volume grows with the corpus while duplicate-family sizes
+    (whose shingles have df ≈ family size) don't, so it stays recall-safe
+    as data grows where any absolute cap eventually cuts into real
+    duplicate families. The effective cap is
+    ``greatest(ceil(frac · n_docs), 1)`` computed in double on both
+    engines (identical IEEE result, oracle-stable). Default None = fully
+    exact (oracle mode).
     """
     from pyspark import StorageLevel
 
@@ -371,44 +412,15 @@ def ngram_jaccard_pairs(
     # distinct head plans twice — the plan showed 2 full documents scans
     # and zero ReusedExchange (guide §2.4)
     postings = capped_postings(
-        df, id_col, text_col, n, max_doc_freq=max_doc_freq, max_doc_frac=max_doc_frac
+        df, id_col, text_col, n, max_doc_frac=max_doc_frac
     ).persist(StorageLevel.MEMORY_AND_DISK)
     if not _worth_collapsing(df, text_col):
-        return _exact_jaccard_pairs(postings, threshold)
-    members, rep_pairs = _collapsed_pair_structure(postings, threshold)
-    ma = members.select(col("rep").alias("id_a"), col("id").alias("m_a"))
-    mb = members.select(col("rep").alias("id_b"), col("id").alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            "n_common",
-            "jaccard",
-        )
+        return _jaccard_from_counts(_pair_counts(postings), threshold)
+    members, rpost = _identical_set_members(postings)
+    rep_pairs = _jaccard_from_counts(_pair_counts(rpost), threshold)
+    return _expand_rep_pairs(rep_pairs, members).unionByName(
+        _within_pairs(members, threshold)
     )
-    # within-group pairs share the whole FILTERED set (n_kept shingles);
-    # under a cap their measured Jaccard n_kept/(2s-n_kept) can be < 1 and
-    # must still clear the threshold, exactly as the all-pairs form computes
-    m1 = members.select("set_fp", "set_size", col("id").alias("id_a"), "n_kept")
-    m2 = members.select("set_fp", "set_size", col("id").alias("id_b"))
-    within = (
-        m1.join(m2, ["set_fp", "set_size"])
-        .filter(col("id_a") < col("id_b"))
-        .withColumn(
-            "jaccard_raw",
-            col("n_kept") / (col("set_size") * 2 - col("n_kept")),
-        )
-        .filter(col("jaccard_raw") >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            col("n_kept").alias("n_common"),
-            fp_ratio("n_kept", "set_size * 2 - n_kept").alias("jaccard"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 def jaccard_prefix_filter_pairs(
@@ -471,27 +483,14 @@ def jaccard_prefix_filter_pairs(
         StorageLevel.MEMORY_AND_DISK
     )
 
-    # 0. collapse identical shingle sets: one representative per set_fp —
+    # 0. collapse identical shingle sets: one representative per set —
     # gated by the cheap clone-fraction pre-check (VERDICT r4 #5): on a
     # clone-free corpus every doc is its own representative and the
     # fingerprint/expansion machinery is pure overhead
     collapse = _worth_collapsing(df, text_col)
     if collapse:
-        sets = postings.groupBy("id", "set_size").agg(
-            F.md5(F.concat_ws("\x1f", F.array_sort(F.collect_list("shingle")))).alias(
-                "set_fp"
-            )
-        )
-        reps = sets.groupBy("set_fp").agg(F.min("id").alias("rep"))
-        # members expand the rep pairs back at the end (4 more consumers)
-        members = (
-            sets.join(reps, "set_fp")
-            .select("set_fp", "id", "rep", "set_size")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        rpost = postings.join(
-            members.filter(col("id") == col("rep")).select("id"), "id"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        members, rpost = _identical_set_members(postings)
+        rpost = rpost.persist(StorageLevel.MEMORY_AND_DISK)
     else:
         rpost = postings  # already persisted above
 
@@ -520,67 +519,11 @@ def jaccard_prefix_filter_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    pa = rpost.select(col("id").alias("id_a"), col("set_size").alias("size_a"), "shingle")
-    pb = rpost.select(col("id").alias("id_b"), col("set_size").alias("size_b"), "shingle")
-    rep_pairs = (
-        cand.join(pa, "id_a")
-        .join(pb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .withColumn(
-            "jaccard_raw", col("n_common") / (col("size_a") + col("size_b") - col("n_common"))
-        )
-        .filter(col("jaccard_raw") >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            "n_common",
-            fp_ratio("n_common", "size_a + size_b - n_common").alias("jaccard"),
-        )
-    )
+    rep_pairs = _verify_candidates(cand, rpost, threshold)
     if not collapse:
         return rep_pairs
-
-    # expand representative pairs to all member pairs (cross-group) …
-    ma = members.select(col("rep").alias("id_a"), col("id").alias("m_a"))
-    mb = members.select(col("rep").alias("id_b"), col("id").alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            "n_common",
-            "jaccard",
-        )
-    )
-    # … plus within-group pairs: identical sets, Jaccard exactly 1
-    m1 = members.select("set_fp", col("id").alias("id_a"), "set_size")
-    m2 = members.select("set_fp", col("id").alias("id_b"))
-    within = (
-        m1.join(m2, "set_fp")
-        .filter(col("id_a") < col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            col("set_size").cast("long").alias("n_common"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(within)
-
-
-def _containment_counts(postings: DataFrame) -> DataFrame:
-    """Undirected (id_a < id_b) pair overlap counts carrying BOTH set sizes —
-    the shared candidate aggregate that both containment directions read, so
-    the posting self-join (the expensive half) runs once per pair, not twice."""
-    a = postings.select(col("id").alias("id_a"), col("set_size").alias("size_a"), "shingle")
-    b = postings.select(col("id").alias("id_b"), col("set_size").alias("size_b"), "shingle")
-    return (
-        a.join(b, "shingle")
-        .filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    return _expand_rep_pairs(rep_pairs, members).unionByName(
+        _within_pairs(members, threshold)
     )
 
 
@@ -627,7 +570,6 @@ def containment_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.6,
-    max_doc_freq: int | None = None,
     max_doc_frac: float | None = None,
 ) -> DataFrame:
     """DIRECTIONAL n-gram-set CONTAINMENT pairs: emit src→dst whenever
@@ -647,8 +589,7 @@ def containment_pairs(
     threshold each. The df-cap lever is identical to the Jaccard family's
     (``capped_postings``): set sizes keep counting dropped shingles, so the
     measured containment only shrinks — exact precision on the TRUE metric,
-    recall loss confined to pairs whose overlap is boilerplate shingles;
-    the fractional form stays recall-safe as the corpus grows.
+    recall loss confined to pairs whose overlap is boilerplate shingles.
 
     Identical-set collapse (``_worth_collapsing`` gate, the exact-Jaccard
     lemma): byte-identical post-cap shingle sets have identical overlap
@@ -664,13 +605,12 @@ def containment_pairs(
     # machinery when engaged) consume postings — one head, not two
     # (guide §2.4; same fix as ngram_jaccard_pairs)
     postings = capped_postings(
-        df, id_col, text_col, n, max_doc_freq=max_doc_freq, max_doc_frac=max_doc_frac
+        df, id_col, text_col, n, max_doc_frac=max_doc_frac
     ).persist(StorageLevel.MEMORY_AND_DISK)
     if not _worth_collapsing(df, text_col):
-        return _directional_containment(_containment_counts(postings), threshold)
-    members = _identical_set_members(postings).persist(StorageLevel.MEMORY_AND_DISK)
-    rpost = postings.join(members.filter(col("id") == col("rep")).select("id"), "id")
-    rep_dir = _directional_containment(_containment_counts(rpost), threshold)
+        return _directional_containment(_pair_counts(postings), threshold)
+    members, rpost = _identical_set_members(postings)
+    rep_dir = _directional_containment(_pair_counts(rpost), threshold)
     ms = members.select(col("rep").alias("src_id"), col("id").alias("m_src"))
     md = members.select(col("rep").alias("dst_id"), col("id").alias("m_dst"))
     cross = (
@@ -709,10 +649,9 @@ def portable_hash60(e, seed: int | None = None):
     15 hex chars = 60 bits, always positive, fits a signed BIGINT in both.
 
     This is the oracle-portability lever for the MinHash/SimHash family
-    (VERDICT r3 #2): xxhash64 has no DuckDB twin, md5 does. xxhash64 stays
-    the default in the operators (single fused JVM intrinsic, no string
-    digest materialization) — portable mode is for oracle-checked queries
-    and costs one md5 per (row, seed), still whole-stage codegen.
+    (VERDICT r3 #2): xxhash64 has no DuckDB twin, md5 does. MinHash pays
+    one md5 per posting and SimHash one per token, still whole-stage
+    codegen.
     """
     prefix = F.lit("" if seed is None else f"{seed}:")
     return F.conv(F.substring(F.md5(F.concat(prefix, e)), 1, 15), 16, 10).cast("long")
@@ -795,33 +734,23 @@ def _mh_ab(i: int) -> tuple[int, int]:
     return a, b
 
 
-def _minhash_from_postings(
-    postings: DataFrame, num_hashes: int, portable: bool = False
-) -> DataFrame:
-    if portable:
-        # ONE md5 per posting + an affine universal family over Z_p:
-        # h_i(s) = (a_i·h(s) + b_i) mod p with h(s) = portable_hash60 mod p.
-        # Equivalent min-hash quality to per-seed hashing (Carter–Wegman
-        # universal family) at 1/num_hashes the digest cost, and the DuckDB
-        # oracle replays the same integer ops from the same one md5
-        # (formerly 32 md5s per posting — the dominant cost both sides).
-        # a_i·h < 2^62 — no BIGINT overflow.
-        postings = postings.withColumn(
-            "_b0", F.pmod(portable_hash60(col("shingle")), F.lit(_MH_P))
+def _minhash_from_postings(postings: DataFrame, num_hashes: int) -> DataFrame:
+    # ONE md5 per posting + an affine universal family over Z_p:
+    # h_i(s) = (a_i·h(s) + b_i) mod p with h(s) = portable_hash60 mod p.
+    # Equivalent min-hash quality to per-seed hashing (Carter–Wegman
+    # universal family) at 1/num_hashes the digest cost, and the DuckDB
+    # oracle replays the same integer ops from the same one md5
+    # (formerly 32 md5s per posting — the dominant cost both sides).
+    # a_i·h < 2^62 — no BIGINT overflow.
+    postings = postings.withColumn(
+        "_b0", F.pmod(portable_hash60(col("shingle")), F.lit(_MH_P))
+    )
+    aggs = []
+    for i in range(num_hashes):
+        a_i, b_i = _mh_ab(i)
+        aggs.append(
+            F.min((F.lit(a_i) * col("_b0") + F.lit(b_i)) % F.lit(_MH_P)).alias(f"h{i}")
         )
-        aggs = []
-        for i in range(num_hashes):
-            a_i, b_i = _mh_ab(i)
-            aggs.append(
-                F.min((F.lit(a_i) * col("_b0") + F.lit(b_i)) % F.lit(_MH_P)).alias(
-                    f"h{i}"
-                )
-            )
-    else:
-        aggs = [
-            F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
     flat = postings.groupBy("id", "set_size").agg(*aggs)
     return flat.select(
         "id",
@@ -830,27 +759,44 @@ def _minhash_from_postings(
     )
 
 
+def _band_buckets(bands: int, rows_per_band: int):
+    """One ``bb`` struct (band, bucket) per band of a ``sig`` column, to
+    explode: the bucket key is the band's raw signature slice joined as a
+    string — plain value equality, so the DuckDB oracle reproduces the
+    exact same buckets with string_agg(... ORDER BY seed)."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.concat_ws(
+                        "|",
+                        *[col("sig")[b * rows_per_band + r] for r in range(rows_per_band)],
+                    ).alias("bucket"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("bb")
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     num_hashes: int = 32,
-    portable: bool = False,
 ) -> DataFrame:
-    """MinHash signatures: sig[i] = min over shingles of h_i(shingle)
-    (xxhash64-per-seed by default; ``portable=True`` switches to ONE
-    md5-derived :func:`portable_hash60` per shingle expanded by the
+    """MinHash signatures: sig[i] = min over shingles of h_i(shingle), with
+    ONE md5-derived :func:`portable_hash60` per shingle expanded by the
     Carter–Wegman affine family (a_i·h+b_i) mod 2^31−1, so a DuckDB
-    oracle replays the signature at 1/num_hashes the digest cost).
+    oracle replays the signature at 1/num_hashes the digest cost.
 
     Flat codegen shape: one row per (doc, shingle), ``num_hashes``
     min-aggregates. Partial mins combine map-side, so the shuffle carries
     one row per doc regardless of document length.
     """
-    return _minhash_from_postings(
-        shingle_postings(df, id_col, text_col, n), num_hashes, portable=portable
-    )
+    return _minhash_from_postings(shingle_postings(df, id_col, text_col, n), num_hashes)
 
 
 def minhash_lsh_pairs(
@@ -861,7 +807,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    portable: bool = False,
     max_bucket_frac: float | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact-Jaccard verification.
@@ -918,41 +863,14 @@ def minhash_lsh_pairs(
     # either way, and on a clone-free corpus the collapse is pure overhead.
     collapse = _worth_collapsing(df, text_col)
     if collapse:
-        members, _ = _collapsed_pair_structure(all_postings, threshold=2.0)  # pairs unused
-        postings = all_postings.join(
-            members.filter(col("id") == col("rep")).select("id"), "id"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        members, postings = _identical_set_members(all_postings)
+        postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
     else:
         postings = all_postings  # already persisted above
-    sigs = _minhash_from_postings(postings, num_hashes, portable=portable)
-    if portable:
-        # bucket key = the band's raw signature slice joined as a string —
-        # plain value equality, so the DuckDB oracle reproduces the exact
-        # same buckets with string_agg(... ORDER BY seed)
-        band_cols = [
-            F.concat_ws(
-                "|", *[col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-            ).alias(f"band{b}")
-            for b in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(
-                *[col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-            ).alias(f"band{b}")
-            for b in range(bands)
-        ]
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_cols[b].alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", col("bb.band").alias("band"), col("bb.bucket").alias("bucket"))
+    sigs = _minhash_from_postings(postings, num_hashes)
+    banded = sigs.select("id", _band_buckets(bands, rows_per_band)).select(
+        "id", col("bb.band").alias("band"), col("bb.bucket").alias("bucket")
+    )
 
     if max_bucket_frac is not None:
         # hot-bucket cap: drop (band, bucket) rows whose DOCUMENT mass
@@ -989,52 +907,20 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    pa = postings.select(col("id").alias("id_a"), col("set_size").alias("size_a"), "shingle")
-    pb = postings.select(col("id").alias("id_b"), col("set_size").alias("size_b"), "shingle")
-    rep_pairs = (
-        cand.join(pa, "id_a")
-        .join(pb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .withColumn(
-            "jaccard_raw", col("n_common") / (col("size_a") + col("size_b") - col("n_common"))
+    pairs = _verify_candidates(cand, postings, threshold)
+    if collapse:
+        members_w = members
+        if max_bucket_frac is not None:
+            # a family whose EVERY band bucket breached the cap generates no
+            # candidates on the direct path either — its within-pairs drop on
+            # both paths alike; survivors (≥1 surviving bucket row) emit as
+            # usual. banded is already cap-filtered here.
+            surviving = banded.select(col("id").alias("rep")).distinct()
+            members_w = members.join(surviving, "rep")
+        pairs = _expand_rep_pairs(pairs, members).unionByName(
+            _within_pairs(members_w, threshold)
         )
-        .filter(col("jaccard_raw") >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            fp_ratio("n_common", "size_a + size_b - n_common").alias("jaccard"),
-        )
-    )
-    if not collapse:
-        return rep_pairs
-    ma = members.select(col("rep").alias("id_a"), col("id").alias("m_a"))
-    mb = members.select(col("rep").alias("id_b"), col("id").alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            "jaccard",
-        )
-    )
-    members_w = members
-    if max_bucket_frac is not None:
-        # a family whose EVERY band bucket breached the cap generates no
-        # candidates on the direct path either — its within-pairs drop on
-        # both paths alike; survivors (≥1 surviving bucket row) emit as
-        # usual. banded is already cap-filtered here.
-        surviving = banded.select(col("id").alias("rep")).distinct()
-        members_w = members.join(surviving, "rep")
-    m1 = members_w.select("set_fp", "set_size", col("id").alias("id_a"))
-    m2 = members_w.select("set_fp", "set_size", col("id").alias("id_b"))
-    within = (
-        m1.join(m2, ["set_fp", "set_size"])
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
+    return pairs.select("id_a", "id_b", "jaccard")
 
 
 def incremental_minhash_lsh(
@@ -1123,28 +1009,10 @@ def incremental_minhash_lsh(
             "spark.sql.adaptive.enabled": "false",
         }
     with scoped_conf(spark, confs):
-        sigs = minhash_signatures(batch, id_col, text_col, n, num_hashes, portable=True)
-        banded = sigs.select(
-            "id",
-            "sig",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    col("sig")[b * rows_per_band + r]
-                                    for r in range(rows_per_band)
-                                ],
-                            ).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(col("bb.band").alias("band"), col("bb.bucket").alias("bucket"), "id", "sig")
+        sigs = minhash_signatures(batch, id_col, text_col, n, num_hashes)
+        banded = sigs.select("id", "sig", _band_buckets(bands, rows_per_band)).select(
+            col("bb.band").alias("band"), col("bb.bucket").alias("bucket"), "id", "sig"
+        )
         # banded feeds BOTH the decisions and the state write — persist so the
         # tokenize→explode→window→32-min signature chain (the expensive stage)
         # runs once per increment, not twice (VERDICT r5 #5)
@@ -1249,10 +1117,10 @@ def incremental_minhash_lsh(
             banded.unpersist()
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, portable: bool = False) -> DataFrame:
-    """SimHash per document from word tokens — 64-bit (xxhash64, default)
-    or 60-bit (``portable=True``, md5-derived :func:`portable_hash60` so a
-    DuckDB oracle can replay every bit).
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """60-bit SimHash per document from word tokens, hashed with the
+    md5-derived :func:`portable_hash60` so a DuckDB oracle can replay every
+    bit.
 
     simhash bit b = sign of Σ_tokens (±1 depending on bit b of
     hash(token)); near-duplicates differ in few bits (compare with
@@ -1261,13 +1129,13 @@ def simhash(df: DataFrame, id_col: str, text_col: str, portable: bool = False) -
     One explode + one groupBy(id) with one conditional-sum expression per
     bit — all codegen'd; no Python.
     """
-    nbits = 60 if portable else 64
+    nbits = 60
     base = spread_small_scan(
         df.select(col(id_col).alias("id"), col(text_col).alias("_text"))
     )
-    tok = base.select("id", F.explode(tokens("_text")).alias("tok"))
-    h = portable_hash60(col("tok")) if portable else F.xxhash64("tok")
-    tok = tok.withColumn("h", h)
+    tok = base.select("id", F.explode(tokens("_text")).alias("tok")).withColumn(
+        "h", portable_hash60(col("tok"))
+    )
     bit_sums = [
         F.sum(
             F.when(F.shiftright(col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -1293,7 +1161,7 @@ SIMHASH_COMBOS: list[tuple[int, int, int]] = [
 
 
 def simhash_near_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 8, portable: bool = False
+    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 8
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance, blocked on TRIPLES of
     10-bit signature chunks (Manku et al., WWW'07 §3 multi-table shape).
@@ -1308,11 +1176,9 @@ def simhash_near_pairs(
     went quadratic at N=5·10⁵ (the r4 100× residual: ~10⁹ candidates,
     oracle OOM at 88 GB RSS). Beyond hamming 3 recall is heuristic in
     both geometries; the registered contract is the blocked candidate set.
-    Non-portable 64-bit signatures block on their low 60 bits and verify
-    hamming over all 64.
     """
     chunk_bits, mask = 10, (1 << 10) - 1
-    sigs = simhash(df, id_col, text_col, portable=portable)
+    sigs = simhash(df, id_col, text_col)
 
     def chunk(i: int):
         return F.shiftright(col("simhash"), i * chunk_bits).bitwiseAND(F.lit(mask))

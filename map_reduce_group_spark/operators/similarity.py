@@ -3,8 +3,7 @@
 - brute-force cosine top-k: the exact baseline — corpus hash-sharded with
   queries replicated per shard (fully distributed, no driver collect),
   NumPy matmul per shard with local top-k pruning, then one k-bounded
-  global ranking; an opt-in bounded broadcast path keeps the corpus scan
-  narrow when the query set is provably tiny.
+  global ranking.
 - IVF-style bucketed ANN: deterministic hyperplane LSH code per vector;
   per-bucket NumPy matmul via cogrouped applyInPandas — the scale path:
   each query touches 1/2^p of the corpus and the shuffle key is the bucket.
@@ -88,64 +87,22 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 5,
     round_digits: int = 5,
-    n_shards: int | None = None,
-    max_broadcast_queries: int | None = None,
 ) -> DataFrame:
     """Exact brute-force cosine top-k: (q_id, c_id, cos, rank).
 
-    Default (distributed, no driver-side collect): the corpus is salted into
-    ``n_shards`` hash shards and the queries — the small side — replicate
-    once per shard; a cogrouped applyInPandas runs the NumPy Q·Bᵀ kernel per
-    shard with local top-k pruning, and one window merges shard winners.
-    Each corpus row lives in exactly one shard and each query visits every
-    shard, so the result is exact and independent of ``n_shards``. Shuffle
-    volume: corpus once + queries × n_shards — both sides stay on executors.
-
-    ``max_broadcast_queries=N`` selects the shuffle-free fast path for small
-    query sets: queries are collected (bounded — raises if more than N rows)
-    and broadcast as one unit-row matrix, and the corpus is scanned narrowly
-    with per-Arrow-batch pruning. Optimal when Q is tiny and the corpus is
-    huge; the default path is the one that survives unbounded Q.
+    Distributed, with no driver-side collect: the corpus is salted into
+    ``max(defaultParallelism, 8)`` hash shards and the queries — the small
+    side — replicate once per shard; a cogrouped applyInPandas runs the
+    NumPy Q·Bᵀ kernel per shard with local top-k pruning, and one window
+    merges shard winners. Each corpus row lives in exactly one shard and
+    each query visits every shard, so the result is exact and independent
+    of the shard count. Shuffle volume: corpus once + queries × shards —
+    both sides stay on executors, and the path survives unbounded Q.
     """
     spark = corpus.sparkSession
     id_t = _id_type(corpus, id_col)
     out_schema = f"q_id {id_t}, c_id {id_t}, cos double"
-
-    if max_broadcast_queries is not None:
-        qpdf = (
-            queries.select(col(id_col).alias("q_id"), col(vec_col).alias("v"))
-            .limit(max_broadcast_queries + 1)
-            .toPandas()
-        )
-        if len(qpdf) > max_broadcast_queries:
-            raise ValueError(
-                f"cosine_topk broadcast path got > {max_broadcast_queries} "
-                "queries; raise max_broadcast_queries or use the default "
-                "distributed path"
-            )
-        if not len(qpdf):  # no queries → empty result with the right schema
-            return spark.createDataFrame([], out_schema + ", rank bigint")
-        bq = spark.sparkContext.broadcast(
-            (qpdf["q_id"].to_numpy(), _unit_rows(_matrix(qpdf["v"])))
-        )
-
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ids, qmat = bq.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                yield _local_topk(
-                    ids, qmat, pdf["c_id"].to_numpy(), _unit_rows(_matrix(pdf["v"])),
-                    k, round_digits,
-                )
-
-        flat = corpus.select(
-            col(id_col).alias("c_id"), col(vec_col).alias("v")
-        ).mapInPandas(score, out_schema)
-        return _rank_topk(flat, k)
-
-    if n_shards is None:
-        n_shards = max(spark.sparkContext.defaultParallelism, 8)
+    n_shards = max(spark.sparkContext.defaultParallelism, 8)
     q = queries.select(
         col(id_col).alias("id"),
         col(vec_col).alias("v"),
@@ -278,47 +235,18 @@ def semantic_contamination(
 # — integer, reproducible anywhere, spread across dimensions.
 def _planes(n_planes: int, dim: int) -> np.ndarray:
     i = np.arange(dim)
-    return np.stack([((i * 31 + p * 17) % 13 - 6).astype(np.float64) for p in range(n_planes)])
+    return np.stack([(i * 31 + p * 17) % 13 - 6 for p in range(n_planes)]).astype(np.int64)
 
 
-def _planes_int(n_planes: int, dim: int) -> np.ndarray:
-    """Integer form of the deterministic hyperplanes (portable bucketing)."""
-    return _planes(n_planes, dim).astype(np.int64)
-
-
-def lsh_bucket(vec: F.Column, n_planes: int = 4) -> F.Column:
-    """Hyperplane-LSH code: bit p = sign(vec · plane_p) → int bucket.
-
-    JVM expression form (used where a pure-SQL bucket is handy); the NumPy
-    operators below compute the identical code vectorized."""
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(0), F.size(vec) - 1),
-                lambda x, i: x.cast("double") * ((i * 31 + F.lit(p * 17)) % 13 - 6).cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
-
-
-def _bucketize(
-    df: DataFrame, id_col: str, vec_col: str, n_planes: int, portable: bool = False
-) -> DataFrame:
+def _bucketize(df: DataFrame, id_col: str, vec_col: str, n_planes: int) -> DataFrame:
     """(id, v, bucket) with the hyperplane code computed via NumPy.
     Schema (id and vector element types) is preserved from the input.
 
-    ``portable=True`` computes the projection in 1/2^20 fixed point
-    (``q_i = floor(v_i · 2^20)`` — exact in IEEE doubles, the
-    random_project_fp convention) against the INTEGER plane matrix, so the
-    bit pattern ``sign(Σ q_i · plane_pi)`` is an order-free integer sum a
-    SQL oracle replays exactly. The float path keeps one fewer rounding
-    step for library use; bucket geometry differs only for vectors whose
-    projection magnitude is below the quantization noise."""
+    The projection is computed in 1/2^20 fixed point (``q_i = floor(v_i ·
+    2^20)`` — exact in IEEE doubles, the random_project_fp convention)
+    against the INTEGER plane matrix, so the bit pattern
+    ``sign(Σ q_i · plane_pi)`` is an order-free integer sum a SQL oracle
+    replays exactly."""
     out_schema = f"id {_id_type(df, id_col)}, v {_id_type(df, vec_col)}, bucket int"
 
     def code(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -328,16 +256,9 @@ def _bucketize(
                 continue
             m = _matrix(pdf["v"])
             if planes is None:
-                planes = (
-                    _planes_int(n_planes, m.shape[1])
-                    if portable
-                    else _planes(n_planes, m.shape[1])
-                )
-            if portable:
-                q = np.floor(m * 1048576.0).astype(np.int64)
-                bits = (q @ planes.T) >= 0  # exact int64 — order-free
-            else:
-                bits = (m @ planes.T) >= 0  # (B, P)
+                planes = _planes(n_planes, m.shape[1])
+            q = np.floor(m * 1048576.0).astype(np.int64)
+            bits = (q @ planes.T) >= 0  # exact int64 — order-free
             bucket = (bits * (1 << np.arange(n_planes))).sum(axis=1)
             yield pd.DataFrame({"id": pdf["id"], "v": pdf["v"], "bucket": bucket})
 
@@ -354,7 +275,6 @@ def ivf_topk(
     n_planes: int = 4,
     probe_hamming: int = 1,
     round_digits: int = 5,
-    portable: bool = False,
 ) -> DataFrame:
     """ANN top-k with multiprobe: each query probes its own LSH bucket plus
     every bucket within ``probe_hamming`` code-bit flips (hamming-1 ⇒
@@ -369,7 +289,7 @@ def ivf_topk(
     global per-query top-k."""
     if probe_hamming not in (0, 1):
         raise ValueError("probe_hamming supports 0 (single-probe) or 1 (hamming-1)")
-    q = _bucketize(queries, id_col, vec_col, n_planes, portable=portable)
+    q = _bucketize(queries, id_col, vec_col, n_planes)
     if probe_hamming >= 1:
         # Hamming-1 expansion: the original code plus each single-bit flip
         flips = F.array(
@@ -377,7 +297,7 @@ def ivf_topk(
             *[F.col("bucket").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)],
         )
         q = q.select("id", "v", F.explode(flips).alias("bucket"))
-    c = _bucketize(corpus, id_col, vec_col, n_planes, portable=portable)
+    c = _bucketize(corpus, id_col, vec_col, n_planes)
 
     def bucket_topk(key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
         if not len(qpdf) or not len(cpdf):
@@ -655,19 +575,16 @@ def cosine_neardup_pairs(
     threshold: float = 0.95,
     n_planes: int = 4,
     round_digits: int = 5,
-    portable: bool = False,
 ) -> DataFrame:
     """Embedding near-duplicate pairs: bucket with hyperplane LSH, then a
     per-bucket C·Cᵀ with thresholding (approximate recall, exact precision).
     Bucket size bounds the quadratic term; add planes to shrink buckets,
     and the per-bucket work is tiled into block-pair cogroups
     (:func:`_keyed_cosine_pairs`) so a hot bucket never materializes its
-    whole similarity matrix in one task. ``portable=True`` buckets in
-    fixed point (see :func:`_bucketize`) so a SQL oracle replays the exact
-    candidate structure."""
-    v = _bucketize(df, id_col, vec_col, n_planes, portable=portable).select(
-        "id", "v", "bucket"
-    )
+    whole similarity matrix in one task. Buckets are fixed point (see
+    :func:`_bucketize`), so a SQL oracle replays the exact candidate
+    structure."""
+    v = _bucketize(df, id_col, vec_col, n_planes).select("id", "v", "bucket")
     return _keyed_cosine_pairs(
         v, "bucket", _id_type(df, id_col), threshold, round_digits
     )
@@ -1198,7 +1115,6 @@ def pq_adc_topk(
     n_codes: int = 8,
     train_iters: int = 2,
     levels: int = 256,
-    n_shards: int | None = None,
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
     (Jégou et al., "Product Quantization for Nearest Neighbor Search",
@@ -1315,8 +1231,7 @@ def pq_adc_topk(
 
     enc = cflat.mapInPandas(encode, f"id {id_t}, codes array<int>")
 
-    if n_shards is None:
-        n_shards = max(spark.sparkContext.defaultParallelism, 8)
+    n_shards = max(spark.sparkContext.defaultParallelism, 8)
     c = enc.withColumn(
         "shard", F.pmod(F.xxhash64(col("id")), F.lit(n_shards)).cast("int")
     )

@@ -5,11 +5,10 @@ dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash), similarity search
 Oracle policy: everything whose semantics are ANSI-SQL-expressible carries
 a DuckDB oracle built from the SAME formulas (identical tokenizer regex,
 identical rounding). The hash-based operators (MinHash / SimHash / ANN
-buckets) run in PORTABLE mode — md5-derived ``portable_hash60`` signatures
-plus integer-only downstream math (affine Carter–Wegman expansion,
-fixed-point projections) — so their DuckDB oracles replay signatures,
-buckets, candidates, and verification bit-for-bit (r4 recontracts; the
-xxhash64 fast path remains the library default for non-oracle use). Only
+buckets) are portable — md5-derived ``portable_hash60`` signatures plus
+integer-only downstream math (affine Carter–Wegman expansion, fixed-point
+projections) — so their DuckDB oracles replay signatures, buckets,
+candidates, and verification bit-for-bit (r4 recontracts). Only
 engine-private candidate pools (approx sketches, seeded sampling,
 batch-local heavy-hitter pools) stay rows-only, each with a property-test
 backstop.
@@ -917,8 +916,8 @@ def _clusters_scale_oracle(rounds: int = 12) -> str:
 # applies the same public, provably-lossless pruning the Spark side uses, for
 # queries whose driver-facing oracle is deliberately naive/all-pairs (the
 # naive form IS the losslessness check at sf0.01; at 100x it is quadratic).
-# Fixed-point hyperplane-LSH bucket CTEs (similarity._bucketize portable
-# mode): q_j = floor(v_j · 2^20) is exact in IEEE doubles (power-of-two
+# Fixed-point hyperplane-LSH bucket CTEs (similarity._bucketize):
+# q_j = floor(v_j · 2^20) is exact in IEEE doubles (power-of-two
 # scaling — the random_project_fp convention), plane[p][j] = (j·31+p·17)%13−6
 # is integer, so bucket bit p = [Σ_j q_j·plane_pj ≥ 0] is an order-free
 # integer sum both engines compute identically. Expects a CTE ``e(vec_id, v)``
@@ -1495,7 +1494,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the digest cost 32× on BOTH engines vs per-seed md5)."""
     d = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
-        d, "doc_id", "text", n=3, num_hashes=32, bands=8, threshold=0.3, portable=True
+        d, "doc_id", "text", n=3, num_hashes=32, bands=8, threshold=0.3
     )
 
 
@@ -1537,7 +1536,7 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
         d, "doc_id", "text", n=3, num_hashes=32, bands=8, threshold=0.3,
-        portable=True, max_bucket_frac=0.02,
+        max_bucket_frac=0.02,
     )
 
 
@@ -1582,7 +1581,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable_hash60, so the DuckDB oracle recomputes the signatures, the
     triple blocking, and the hamming filter bit-for-bit."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = dedup.simhash_near_pairs(d, "doc_id", "text", max_hamming=12, portable=True)
+    pairs = dedup.simhash_near_pairs(d, "doc_id", "text", max_hamming=12)
     return pairs.select("id_a", "id_b", col("hamming").cast("long").alias("hamming"))
 
 
@@ -1630,7 +1629,7 @@ def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only with "bucket geometry engine-private")."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(col("vec_id") % 50 == 0)
-    return similarity.ivf_topk(q, e, k=5, portable=True)
+    return similarity.ivf_topk(q, e, k=5)
 
 
 @register(
@@ -1657,7 +1656,7 @@ def embed_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle rebuilds the buckets and verifies every in-bucket
     pair (formerly rows-only)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_neardup_pairs(e, threshold=0.4, portable=True)
+    return similarity.cosine_neardup_pairs(e, threshold=0.4)
 
 
 @register(
@@ -3586,7 +3585,7 @@ def embed_ann_ivf_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.quantize_embeddings(e), mn, mx
     )
     q = deq.filter(col("id") % 50 == 0)
-    return similarity.ivf_topk(q, deq, id_col="id", vec_col="v", k=5, portable=True)
+    return similarity.ivf_topk(q, deq, id_col="id", vec_col="v", k=5)
 
 
 @register(
@@ -3800,13 +3799,14 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     # persist: postings feed the identical-set aggregation AND the rep-
-    # filtered verification join inside _collapsed_pair_structure — one
-    # tokenize+df-cap head for both (the unpersisted plan held 132 copies
-    # of the documents scan, zero ReusedExchange; guide §2.4)
+    # filtered verification join — one tokenize+df-cap head for both (the
+    # unpersisted plan held 132 copies of the documents scan, zero
+    # ReusedExchange; guide §2.4)
     postings = dedup.capped_postings(
         d, "doc_id", "text", n=3, max_doc_frac=0.01
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    members, rep_pairs = dedup._collapsed_pair_structure(postings, threshold=0.05)
+    members, rpost = dedup._identical_set_members(postings)
+    rep_pairs = dedup._jaccard_from_counts(dedup._pair_counts(rpost), 0.05)
 
     groups = (
         members.groupBy("rep", "set_size", "n_kept")
@@ -4234,7 +4234,7 @@ def embed_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = similarity.cosine_topk(q, e, k=5).select(
         "q_id", "c_id", col("rank").alias("rank_e")
     )
-    iv = similarity.ivf_topk(q, e, k=5, portable=True).select(
+    iv = similarity.ivf_topk(q, e, k=5).select(
         "q_id", "c_id", col("rank").alias("rank_i")
     )
     fused = ex.join(iv, ["q_id", "c_id"], "full_outer").select(

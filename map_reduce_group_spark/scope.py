@@ -3,7 +3,8 @@ scoped Spark confs, and the workspace root every query directory lives
 under. Like the reference's one shared temp dir per job (SURVEY.md,
 reference manager/__main__.py:353-363), the root is made on first use and
 removed at interpreter exit, so nothing a query writes to disk outlives
-the process.
+the process; a root left by a signal-killed process is removed by the
+next process that makes one.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from collections.abc import Callable, Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
+_PREFIX = "mrg_workspace_"
 _root: str | None = None
 _sources: dict[tuple[str, str], str] = {}
 _calls = itertools.count()
@@ -41,11 +43,30 @@ def scoped_conf(spark: SparkSession, confs: Mapping[str, object]) -> Iterator[No
                 spark.conf.set(k, v)
 
 
+def _remove_dead_roots(tmp: str) -> None:
+    """Remove the roots of processes that died without running their exit
+    hook (an ``atexit`` hook does not run on a signal). A root's name
+    carries its owner's pid; the root of a live process is never touched."""
+    for name in os.listdir(tmp):
+        pid, sep, _ = name.removeprefix(_PREFIX).partition("_")
+        if not (name.startswith(_PREFIX) and sep and pid.isdigit()):
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+        except OSError:  # alive, owned by another user
+            pass
+
+
 def workspace() -> str:
-    """The process-wide workspace root, removed at interpreter exit."""
+    """The process-wide workspace root, removed at interpreter exit, or by
+    the first later process to use one if this one is killed."""
     global _root
     if _root is None:
-        _root = tempfile.mkdtemp(prefix="mrg_workspace_")
+        tmp = tempfile.gettempdir()
+        _remove_dead_roots(tmp)
+        _root = tempfile.mkdtemp(prefix=f"{_PREFIX}{os.getpid()}_", dir=tmp)
         atexit.register(shutil.rmtree, _root, True)
     return _root
 

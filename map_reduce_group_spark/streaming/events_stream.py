@@ -29,16 +29,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from map_reduce_group_spark.functions.numeric import dsum
 from map_reduce_group_spark.scope import scoped_conf
 
-def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over events parquet (directory or glob).
 
     In production this would be Kafka/Kinesis; the file source has the same
     semantics (exactly-once, checkpointable) and is what the fixtures give
-    us. ``max_files_per_trigger`` bounds micro-batch size (and, under
-    availableNow, forces a deterministic one-file-per-batch replay — the
-    multi-batch harness the outer-join and incremental plans rely on).
+    us.
 
     The ts layout is sniffed with a batch probe (same normalization as
     catalog.load_table): TIMESTAMP(NANOS) parquet arrives as bigint nanos
@@ -55,10 +51,7 @@ def read_events_stream(
     probe_types = dict(spark.read.parquet(path).dtypes)
     ts_t = probe_types.get("ts", "timestamp")
     schema = ", ".join(f"{n} {t}" for n, t in probe_types.items())
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(path)
+    raw = spark.readStream.schema(schema).parquet(path)
     if ts_t == "bigint":  # raw nanoseconds
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if ts_t == "timestamp_ntz":

@@ -143,7 +143,7 @@ def test_jaccard_df_cap_precision(spark, sf_dir):
         (r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(both, "doc_id", "text", threshold=0.5).collect()
     }
     capped_rows = ngram_jaccard_pairs(
-        both, "doc_id", "text", threshold=0.5, max_doc_freq=8
+        both, "doc_id", "text", threshold=0.5, max_doc_frac=0.08
     ).collect()
     capped = {(r["id_a"], r["id_b"]) for r in capped_rows}
     assert capped <= exact, f"cap broke precision: {capped - exact}"
@@ -408,26 +408,6 @@ def test_bmp24_roundtrip_property():
         got_w, got_h, got = decode_bmp24(encode_bmp24(px))
         assert (got_w, got_h) == (w, h)
         np.testing.assert_array_equal(got, px)
-
-
-def test_lsh_bucket_jvm_matches_numpy(spark, sf_dir):
-    """The JVM expression form of the hyperplane code must agree with the
-    NumPy form — same deterministic planes, two implementations."""
-    import pyspark.sql.functions as F
-
-    from map_reduce_group_spark.catalog import load_table
-    from map_reduce_group_spark.operators.similarity import _bucketize, lsh_bucket
-
-    e = load_table(spark, sf_dir, "embeddings")
-    jvm = {
-        r["vec_id"]: r["b"]
-        for r in e.select("vec_id", lsh_bucket(F.col("embedding"), 4).alias("b")).collect()
-    }
-    np_codes = {
-        r["id"]: r["bucket"]
-        for r in _bucketize(e, "vec_id", "embedding", 4).collect()
-    }
-    assert jvm == np_codes
 
 
 def test_connected_components_long_chain(spark):
@@ -1548,13 +1528,13 @@ def test_incremental_minhash_replay_and_union_equivalence(spark, sf_dir, tmp_pat
     # union-equivalence: symmetrized verified pairs of the batch runs,
     # minus the (even, odd) direction phase 1 could not see
     full = minhash_lsh_pairs(
-        docs, "doc_id", "text", threshold=0.0, portable=True
+        docs, "doc_id", "text", threshold=0.0
     )  # candidate set only — re-estimate agreement from signatures
     from map_reduce_group_spark.operators.dedup import minhash_signatures
 
     sig = {
         r["id"]: r["sig"]
-        for r in minhash_signatures(docs, "doc_id", "text", portable=True).collect()
+        for r in minhash_signatures(docs, "doc_id", "text").collect()
     }
     expect = {}
     for r in full.select("id_a", "id_b").distinct().collect():
@@ -1670,20 +1650,17 @@ def test_global_rank_matches_global_window(spark):
 _AB_OPS = {
     "minhash": lambda dedup, docs: dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=32, bands=8,
-        threshold=0.3, portable=True,
+        threshold=0.3,
     ),
     "minhash_capped": lambda dedup, docs: dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=32, bands=8,
-        threshold=0.3, portable=True, max_bucket_frac=0.05,
+        threshold=0.3, max_bucket_frac=0.05,
     ),
     "ngram": lambda dedup, docs: dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.3,
     ),
     "ngram_df_frac": lambda dedup, docs: dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.3, max_doc_frac=0.1,
-    ),
-    "ngram_df_abs": lambda dedup, docs: dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.3, max_doc_freq=8,
     ),
     "prefix": lambda dedup, docs: dedup.jaccard_prefix_filter_pairs(
         docs, "doc_id", "text", n=3, threshold=0.3,
@@ -1788,11 +1765,11 @@ def test_minhash_hot_bucket_cap(spark, sf_dir):
 
     uncapped = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=32, bands=8,
-        threshold=0.3, portable=True,
+        threshold=0.3,
     ).collect()
     capped = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=32, bands=8,
-        threshold=0.3, portable=True, max_bucket_frac=0.05,
+        threshold=0.3, max_bucket_frac=0.05,
     ).collect()
 
     as_set = lambda rows: {(r["id_a"], r["id_b"]) for r in rows}

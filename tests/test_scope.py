@@ -77,6 +77,51 @@ def test_incremental_dedup_built_twice_is_correct_and_leaves_no_dirs(
     assert not [p for p in os.listdir(tmp_path) if p.startswith("mrg_")]
 
 
+_WORKSPACE = """
+import os
+import signal
+import sys
+
+from map_reduce_group_spark.scope import workspace
+
+root = workspace()
+if sys.argv[1] == "kill":
+    os.kill(os.getpid(), signal.SIGKILL)
+if sys.argv[1] == "hold":
+    print(root, flush=True)
+    sys.stdin.read()
+"""
+
+
+def test_workspace_of_a_killed_process_is_removed_by_the_next(tmp_path):
+    """A SIGKILLed process runs no exit hook, so its root stays behind; the
+    next process to make a workspace removes it, and leaves the root of a
+    process that is still running."""
+
+    def run(mode: str, **kw):
+        return subprocess.Popen(
+            [sys.executable, "-c", _WORKSPACE, mode],
+            cwd=REPO,
+            env={**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": str(REPO)},
+            **kw,
+        )
+
+    def roots() -> list[str]:
+        return sorted(p for p in os.listdir(tmp_path) if p.startswith("mrg_"))
+
+    holder = run("hold", stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True)
+    try:
+        held = os.path.basename(holder.stdout.readline().strip())
+        assert run("kill").wait(timeout=120) == -9
+        assert len(roots()) == 2
+        assert run("exit").wait(timeout=120) == 0
+        assert roots() == [held]
+    finally:
+        holder.communicate(timeout=120)
+    assert holder.returncode == 0
+    assert roots() == []
+
+
 def test_scope_is_the_only_owner_of_temp_dirs():
     """Every directory the package creates lives under scope.workspace(),
     which one exit hook removes: no other module makes temp dirs or
